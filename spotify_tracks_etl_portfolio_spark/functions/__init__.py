@@ -22,6 +22,7 @@ DuckDB oracle are written for *bit-deterministic* results:
 
 from __future__ import annotations
 
+import math
 import os
 import re
 
@@ -30,6 +31,26 @@ from pyspark.sql import functions as F
 
 # Decimal wide enough for sf-scale money sums; scale 6 keeps cents exact.
 _DEC = "decimal(28,6)"
+
+
+def quote_ident(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier: spaces, dots and
+    backticks (doubled) stay part of the one name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def num_lit_sql(v) -> str | None:
+    """Exact SQL literal text for an int or finite float, else None.
+    String-cast form sidesteps parser edge cases (negative literals
+    parse as unary minus on a DECIMAL, exponent forms); CAST of a
+    round-trip ``repr`` is value-exact for every finite double."""
+    if isinstance(v, bool):
+        return None
+    if isinstance(v, int):
+        return f"CAST('{v}' AS BIGINT)"
+    if isinstance(v, float) and math.isfinite(v):
+        return f"CAST('{v!r}' AS DOUBLE)"
+    return None
 
 
 def clamp(col: Column | str, lo: float, hi: float) -> Column:

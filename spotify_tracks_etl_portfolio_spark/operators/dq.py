@@ -18,8 +18,9 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from spotify_tracks_etl_portfolio_spark.functions import num_lit_sql, quote_ident
 
 
 @dataclass
@@ -36,6 +37,8 @@ class ValidationReport:
 
     suite: str
     results: list[ExpectationResult] = field(default_factory=list)
+    #: rows the suite's aggregation pass counted (None before a run)
+    row_count: int | None = None
 
     @property
     def success(self) -> bool:
@@ -130,23 +133,36 @@ class Suite:
                 )
             )
 
-        # -- single aggregation pass for all row-level checks --
-        aggs: list[Column] = [F.count(F.lit(1)).alias("__row_count")]
-        for c in self.not_null:
-            aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__nn_{c}"))
-        for c in self.unique:
-            # count == approx-free exact distinct count → uniqueness (A12)
-            aggs.append(F.countDistinct(F.col(c)).alias(f"__du_{c}"))
-            aggs.append(F.count(F.col(c)).alias(f"__cnt_{c}"))
-        for c, (lo, hi) in self.between.items():
-            bad = ~F.col(c).between(lo, hi) & F.col(c).isNotNull()
-            aggs.append(F.sum(bad.cast("long")).alias(f"__rng_{c}"))
-        for c, lo in self.min_value.items():
-            bad = (F.col(c) < lo) & F.col(c).isNotNull()
-            aggs.append(F.sum(bad.cast("long")).alias(f"__min_{c}"))
-        row = df.agg(*aggs).first()
+        # -- ONE aggregation for every row-level check, built as one
+        # selectExpr (one py4j call) over backtick-quoted names and exact
+        # numeric literals --
+        exprs = ["count(1) AS __row_count"]
+        for i, c in enumerate(self.not_null):
+            exprs.append(f"sum(CAST({quote_ident(c)} IS NULL AS BIGINT)) AS __nn{i}")
+        for i, c in enumerate(self.unique):
+            # count == exact distinct count → uniqueness (A12)
+            q = quote_ident(c)
+            exprs.append(f"count({q}) - count(DISTINCT {q}) AS __du{i}")
+        for i, cols in enumerate(self.compound_unique):
+            # surplus rows over distinct keys (A11); a struct is never
+            # NULL, so keys with NULL parts count like any other key
+            key = ", ".join(quote_ident(c) for c in cols)
+            exprs.append(f"count(1) - count(DISTINCT struct({key})) AS __cu{i}")
+        for i, (c, (lo, hi)) in enumerate(self.between.items()):
+            q = quote_ident(c)
+            exprs.append(
+                f"sum(CAST(NOT ({q} BETWEEN {_bound(lo)} AND {_bound(hi)})"
+                f" AND {q} IS NOT NULL AS BIGINT)) AS __rng{i}"
+            )
+        for i, (c, lo) in enumerate(self.min_value.items()):
+            q = quote_ident(c)
+            exprs.append(
+                f"sum(CAST({q} < {_bound(lo)} AND {q} IS NOT NULL AS BIGINT))"
+                f" AS __min{i}"
+            )
+        row = df.selectExpr(*exprs).first()
 
-        n = row["__row_count"]
+        n = report.row_count = row["__row_count"]
         if self.row_count_min is not None:
             report.results.append(
                 ExpectationResult(
@@ -161,49 +177,46 @@ class Suite:
                     f"expected == {self.row_count_equals}",
                 )
             )
-        for c in self.not_null:
-            bad = row[f"__nn_{c}"] or 0
+        for i, c in enumerate(self.not_null):
+            bad = row[f"__nn{i}"] or 0
             report.results.append(
                 ExpectationResult(f"not_null:{c}", bad == 0, bad, "null rows")
             )
-        for c in self.unique:
-            dup = (row[f"__cnt_{c}"] or 0) - (row[f"__du_{c}"] or 0)
+        for i, c in enumerate(self.unique):
+            dup = row[f"__du{i}"]
             report.results.append(
                 ExpectationResult(f"unique:{c}", dup == 0, dup, "duplicate rows")
             )
-        for c in self.between:
-            bad = row[f"__rng_{c}"] or 0
+        for i, (c, rng) in enumerate(self.between.items()):
+            bad = row[f"__rng{i}"] or 0
             report.results.append(
                 ExpectationResult(
-                    f"between:{c}", bad == 0, bad,
-                    f"rows outside {self.between[c]}",
+                    f"between:{c}", bad == 0, bad, f"rows outside {rng}",
                 )
             )
-        for c in self.min_value:
-            bad = row[f"__min_{c}"] or 0
+        for i, (c, lo) in enumerate(self.min_value.items()):
+            bad = row[f"__min{i}"] or 0
             report.results.append(
                 ExpectationResult(
-                    f"min_value:{c}", bad == 0, bad,
-                    f"rows below {self.min_value[c]}",
+                    f"min_value:{c}", bad == 0, bad, f"rows below {lo}",
                 )
             )
-
-        # -- compound uniqueness needs a grouped pass (A11) --
-        for cols in self.compound_unique:
-            dups = (
-                df.groupBy(*cols)
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .filter(F.col("__n") > 1)
-                .limit(1)
-                .count()
-            )
+        for i, cols in enumerate(self.compound_unique):
+            dups = row[f"__cu{i}"]
             report.results.append(
                 ExpectationResult(
                     f"compound_unique:{','.join(cols)}", dups == 0, dups,
-                    "duplicate key groups",
+                    "duplicate rows",
                 )
             )
         return report
+
+
+def _bound(v) -> str:
+    lit = num_lit_sql(v)
+    if lit is None:
+        raise TypeError(f"expectation bound must be an int or finite float, got {v!r}")
+    return lit
 
 
 def spotify_silver_suite() -> Suite:

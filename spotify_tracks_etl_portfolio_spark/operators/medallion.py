@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from spotify_tracks_etl_portfolio_spark.functions import clamp
+from spotify_tracks_etl_portfolio_spark.functions import clamp, quote_ident
 
 
 def enrich_ingest_metadata(
@@ -46,12 +46,14 @@ def enrich_ingest_metadata(
         if batch_identifier is not None
         else F.concat(F.lit("batch_"), F.date_format(ts, "yyyyMMdd_HHmmss"))
     )
-    return (
-        df.withColumn("ingestion_timestamp", ts)
-        .withColumn("source_identifier", F.lit(source_identifier))
-        .withColumn("batch_identifier", batch)
-        .withColumn("created_at", ts)
-        .withColumn("updated_at", ts)
+    return df.withColumns(
+        {
+            "ingestion_timestamp": ts,
+            "source_identifier": F.lit(source_identifier),
+            "batch_identifier": batch,
+            "created_at": ts,
+            "updated_at": ts,
+        }
     )
 
 
@@ -122,31 +124,31 @@ def impute_and_clamp(
     medians = medians or {}
     modes = modes or {}
     clamps = clamps or {}
-    out = df
+    dtypes = dict(df.dtypes)
+    exprs: dict[str, Column] = {}
     for c, med in medians.items():
         expr = F.coalesce(F.col(c), F.lit(med))
         if c in clamps:
             lo, hi = clamps[c]
             expr = clamp(expr, lo, hi)
-        out = out.withColumn(c, expr.cast(dict(df.dtypes)[c]))
+        exprs[c] = expr.cast(dtypes[c])
     for c, mode_val in modes.items():
-        out = out.withColumn(c, F.coalesce(F.col(c), F.lit(mode_val)))
+        exprs[c] = F.coalesce(exprs.get(c, F.col(c)), F.lit(mode_val))
     for c, (lo, hi) in clamps.items():
         if c not in medians:
-            out = out.withColumn(c, clamp(F.col(c), lo, hi).cast(dict(df.dtypes)[c]))
-    return out
+            # a mode-imputed column is coalesced first, then clamped
+            exprs[c] = clamp(exprs.get(c, F.col(c)), lo, hi).cast(dtypes[c])
+    return df.withColumns(exprs) if exprs else df
 
 
 def nan_to_null(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """NaN → NULL normalization before a sink (P6;
     reference: dags/de_spotify_to_bronze.py:189-190)."""
     target = cols or [c for c, t in df.dtypes if t in ("double", "float")]
-    out = df
-    for c in target:
-        out = out.withColumn(
-            c, F.when(F.isnan(F.col(c)), F.lit(None)).otherwise(F.col(c))
-        )
-    return out
+    if not target:
+        return df
+    case = "CASE WHEN isnan({0}) THEN NULL ELSE {0} END"
+    return df.withColumns({c: F.expr(case.format(quote_ident(c))) for c in target})
 
 
 def silver_transform(

@@ -9,7 +9,8 @@ fused single query that computed medians after dedup would silently
 diverge from the reference's semantics.
 
 Scale posture: the reference pulls the full table to pandas for this;
-here it is one distributed aggregation per stats family. Exact median is
+here the medians and the per-dtype modes are distributed aggregations
+fetched together in ONE action (one Spark job set, one plan). Exact median is
 the default for oracle parity; ``exact=False`` switches to
 ``percentile_approx`` for the 100 TB path (documented trade-off,
 SURVEY.md §4.2).
@@ -17,99 +18,111 @@ SURVEY.md §4.2).
 
 from __future__ import annotations
 
-import math
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from spotify_tracks_etl_portfolio_spark.functions import num_lit_sql, quote_ident
 
-def _num_lit_sql(v) -> str | None:
-    """Exact SQL literal text for an int or finite float, else None.
-    String-cast form sidesteps parser edge cases (negative literals
-    parse as unary minus on a DECIMAL, exponent forms); CAST of a
-    round-trip ``repr`` is value-exact for every finite double."""
-    if isinstance(v, bool):
-        return None
-    if isinstance(v, int):
-        return f"CAST('{v}' AS BIGINT)"
-    if isinstance(v, float) and math.isfinite(v):
-        return f"CAST('{v!r}' AS DOUBLE)"
-    return None
+#: ``percentile_approx`` accuracy of the approximate median
+_MEDIAN_ACCURACY = 10000
+
+
+def _median_frame(
+    df: DataFrame, cols: list[str], exact: bool, accuracy: int
+) -> DataFrame:
+    """One-row frame holding the median of ``cols[i]`` as ``__med{i}``."""
+    agg = "median({})" if exact else f"percentile_approx({{}}, 0.5, {int(accuracy)})"
+    return df.selectExpr(
+        *[f"{agg.format(quote_ident(c))} AS __med{i}" for i, c in enumerate(cols)]
+    )
+
+
+def _mode_frames(df: DataFrame, cols: list[str]) -> list[DataFrame]:
+    """One one-row frame per distinct dtype among ``cols``, holding the
+    mode of ``cols[i]`` as ``__mode{i}``.
+
+    Each dtype group is unpivoted to (column index, value) rows and
+    counted in ONE shuffle; the argmax per column is a ``min_by`` over
+    ``struct(−cnt, val)`` restricted to that column's rows — highest
+    count, ties to the smallest value IN THE COLUMN'S OWN TYPE ORDER (a
+    shared cross-type unpivot would force a lossy common cast and a
+    string tie-break, which orders ``10 < 9``)."""
+    dtypes = dict(df.dtypes)
+    by_type: dict[str, list[int]] = {}
+    for i, c in enumerate(cols):
+        by_type.setdefault(dtypes[c], []).append(i)
+
+    frames = []
+    for group in by_type.values():
+        pairs = ", ".join(
+            f"struct({i} AS k, {quote_ident(cols[i])} AS val)" for i in group
+        )
+        counted = (
+            df.selectExpr(f"inline(array({pairs}))")
+            .where("val IS NOT NULL")
+            .groupBy("k", "val")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+        )
+        frames.append(
+            counted.selectExpr(
+                *[
+                    f"min_by(val, CASE WHEN k = {i} THEN struct(-cnt, val) END)"
+                    f" AS __mode{i}"
+                    for i in group
+                ]
+            )
+        )
+    return frames
+
+
+def _stats(
+    df: DataFrame,
+    median_cols: list[str],
+    mode_cols: list[str],
+    exact: bool = True,
+    accuracy: int = _MEDIAN_ACCURACY,
+) -> tuple[dict[str, object], dict[str, object]]:
+    """(medians, modes) from ONE action: the median aggregate and the
+    per-dtype mode aggregates are one-row frames, cross-joined and
+    fetched together."""
+    frames = [_median_frame(df, median_cols, exact, accuracy)] if median_cols else []
+    if mode_cols:
+        frames.extend(_mode_frames(df, mode_cols))
+    if not frames:
+        return {}, {}
+    row = reduce(DataFrame.crossJoin, frames).first()
+    return (
+        {c: row[f"__med{i}"] for i, c in enumerate(median_cols)},
+        {c: row[f"__mode{i}"] for i, c in enumerate(mode_cols)},
+    )
 
 
 def column_medians(
-    df: DataFrame, cols: list[str], exact: bool = True, accuracy: int = 10000
+    df: DataFrame,
+    cols: list[str],
+    exact: bool = True,
+    accuracy: int = _MEDIAN_ACCURACY,
 ) -> dict[str, float]:
     """Median per column in ONE aggregation pass (the reference loops
     per-column in pandas, ``reference: dags/de_spotify_silver.py:56-63``)."""
-    if not cols:
-        return {}
-    if exact:
-        aggs = [F.median(c).alias(c) for c in cols]
-    else:
-        aggs = [F.percentile_approx(c, 0.5, accuracy).alias(c) for c in cols]
-    row = df.agg(*aggs).first()
-    return {c: row[c] for c in cols}
+    return _stats(df, cols, [], exact, accuracy)[0]
 
 
 def column_modes(df: DataFrame, cols: list[str]) -> dict[str, object]:
-    """Mode per column with the pandas tie-break.
+    """Mode per column with the pandas tie-break, in ONE action.
 
     ``pandas.Series.mode()`` drops NaN, sorts tied values ascending and the
     reference takes ``.iloc[0]`` (``reference: dags/de_spotify_silver.py:64-69``)
     — so ties break to the smallest value.
 
-    Scale shape: columns are grouped by their Spark dtype and every
-    group is unpivoted to (col, val) rows and counted in ONE shuffle
-    per DISTINCT dtype (the reference loops a pandas ``.mode()`` per
-    column); the argmax-per-column is a ``min_by`` over
-    ``struct(−cnt, val)`` — highest count, ties to smallest value IN
-    THE COLUMN'S OWN TYPE ORDER (a shared cross-type unpivot would
-    force a lossy common cast and a string tie-break, which orders
-    ``10 < 9``). Job count is bounded by the number of distinct dtypes
-    (a handful), never the column count, so a wide all-numeric schema
-    still runs O(1) aggregation passes.
+    Scale shape: one shuffle per DISTINCT dtype among ``cols`` (the
+    reference loops a pandas ``.mode()`` per column), so a wide
+    all-numeric schema still runs O(1) aggregation passes; the
+    per-dtype results are one-row frames cross-joined into one row.
     """
-    if not cols:
-        return {}
-    dtypes = dict(df.dtypes)
-    out: dict[str, object] = {}
-
-    by_type: dict[str, list[str]] = {}
-    for c in cols:
-        by_type.setdefault(dtypes[c], []).append(c)
-
-    for group in by_type.values():
-        stacked = df.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(c).alias("col"), F.col(c).alias("val")
-                        )
-                        for c in group
-                    ]
-                )
-            ).alias("cv")
-        ).select("cv.col", "cv.val")
-        counted = (
-            stacked.filter(F.col("val").isNotNull())
-            .groupBy("col", "val")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        rows = (
-            counted.groupBy("col")
-            .agg(
-                F.min_by(
-                    "val", F.struct((-F.col("cnt")).alias("nc"), F.col("val"))
-                ).alias("mode")
-            )
-            .collect()
-        )
-        found = {r["col"]: r["mode"] for r in rows}
-        for c in group:
-            out[c] = found.get(c)
-    return out
+    return _stats(df, [], cols)[1]
 
 
 def compute_impute_stats(
@@ -120,11 +133,10 @@ def compute_impute_stats(
 ) -> dict[str, dict[str, object]]:
     """The full stats job: ``{'medians': {...}, 'modes': {...}}`` — the
     engine's version of the XCom stats dict
-    (``reference: dags/de_spotify_silver.py:70``)."""
-    return {
-        "medians": column_medians(df, median_cols, exact=exact),
-        "modes": column_modes(df, mode_cols),
-    }
+    (``reference: dags/de_spotify_silver.py:70``), medians and modes
+    fetched in ONE action."""
+    medians, modes = _stats(df, median_cols, mode_cols, exact)
+    return {"medians": medians, "modes": modes}
 
 
 def global_row_number(
@@ -190,7 +202,7 @@ def _bucketed_global_ranks(
     # construct) — while the parsed form is two calls. Arithmetic is
     # identical (same > / cast / sum chain, value-exact literals);
     # non-numeric leading columns keep the original Column loop.
-    lits = [_num_lit_sql(b) for b in bounds]
+    lits = [num_lit_sql(b) for b in bounds]
     if bounds and all(lits):
         bucket_body = F.expr(
             " + ".join(f"CAST((`{bcol}` > {lb}) AS INT)" for lb in lits)

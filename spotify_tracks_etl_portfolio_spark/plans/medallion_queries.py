@@ -18,7 +18,7 @@ from spotify_tracks_etl_portfolio_spark.operators.medallion import (
 )
 from spotify_tracks_etl_portfolio_spark.operators.stats import (
     column_medians,
-    column_modes,
+    compute_impute_stats,
 )
 from spotify_tracks_etl_portfolio_spark.plans import register
 from spotify_tracks_etl_portfolio_spark.sources.readers import read_parquet_table
@@ -102,8 +102,8 @@ SELECT (SELECT median(value) FROM events) AS median_value,
 )
 def impute_stats_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = read_parquet_table(spark, sf_dir, "events")
-    med = column_medians(events, ["value"], exact=True)["value"]
-    mode = column_modes(events, ["event_type"])["event_type"]
+    stats = compute_impute_stats(events, ["value"], ["event_type"], exact=True)
+    med, mode = stats["medians"]["value"], stats["modes"]["event_type"]
     return spark.createDataFrame(
         [(float(med), str(mode))], "median_value double, mode_event_type string"
     )

@@ -13,10 +13,12 @@ pruning + parquet min/max row-group skipping serve the same access paths.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from enum import Enum
+from typing import Any
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 
 class LoadMode(str, Enum):
@@ -44,11 +46,20 @@ def write_table(
     mode: LoadMode = LoadMode.BATCH,
     partition_by: list[str] | None = None,
     sort_within_partitions: list[str] | None = None,
-) -> None:
-    """Write a table in the selected load mode.
+    observe: Sequence[Observation] = (),
+) -> dict[str, Any]:
+    """Write a table in the selected load mode and return the metrics of
+    ``observe`` (empty when there are none).
 
     ``sort_within_partitions`` gives scan locality on a hot key (the
     analogue of the reference's ``idx_track_id``) without a global sort.
+
+    ``observe`` are Observations attached (``DataFrame.observe``) to
+    ``df`` or to a frame ``df`` derives from, that no earlier action ran.
+    The reference validates loads by re-counting the table after insert
+    (reference: dags/de_spotify_to_bronze.py:213-214 — a second full
+    scan); observed aggregates are computed by the write job itself as
+    the data streams to the sink — zero extra scans at any scale.
     """
     if sort_within_partitions:
         df = df.sortWithinPartitions(*sort_within_partitions)
@@ -56,33 +67,36 @@ def write_table(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
+    metrics: dict[str, Any] = {}
+    for obs in observe:
+        metrics.update(obs.get)
+    return metrics
 
 
-def write_with_metrics(
-    df: DataFrame,
-    path: str,
-    mode: LoadMode = LoadMode.BATCH,
-    count_nulls: list[str] | None = None,
-) -> dict:
-    """Write + observe in ONE pass: the reference validates loads by
-    re-counting the table after insert (reference:
-    dags/de_spotify_to_bronze.py:213-214 — a second full scan); Spark's
-    Observation API attaches aggregates to the write job itself, so row
-    count and per-column null counts are collected as the data streams
-    to the sink — zero extra scans at any scale. Returns the observed
-    metrics dict (``n_rows`` + ``nulls_<col>``)."""
-    from pyspark.sql import Observation
+def written_schema(df: DataFrame, partition_by: list[str] | None = None) -> StructType:
+    """The schema of ``df`` as ``write_table`` stores it: every field
+    nullable, partition columns last in ``partition_by`` order. Reading a
+    just-written table back with it skips Spark's footer-inference job,
+    and partition values keep their written type (inference would read a
+    digits-only string partition value back as a number)."""
+    parts = partition_by or []
+    fields = {f.name: f for f in df.schema.fields}
+    order = [c for c in fields if c not in parts] + list(parts)
+    return StructType(
+        [StructField(c, _nullable(fields[c].dataType), True) for c in order]
+    )
 
-    metrics = [F.count(F.lit(1)).alias("n_rows")] + [
-        F.sum(F.col(c).isNull().cast("long")).alias(f"nulls_{c}")
-        for c in (count_nulls or [])
-    ]
-    obs = Observation("load_metrics")
-    observed = df.observe(obs, *metrics)
-    observed.write.mode(
-        "overwrite" if mode is LoadMode.FULL else "append"
-    ).parquet(path)
-    return dict(obs.get)
+
+def _nullable(t: DataType) -> DataType:
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
 def compact_table(

@@ -99,3 +99,105 @@ def test_validation_report_renders_markdown(spark):
 
     ok = Suite(name="all_green", row_count_min=1).run(df)
     assert "**PASSED**" in ok.to_markdown()
+
+
+def _old_compound_unique_success(df, cols):
+    """The former grouped-pass form: any key group with more than one row."""
+    from pyspark.sql import functions as F
+
+    dups = (
+        df.groupBy(*cols)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .filter(F.col("__n") > 1)
+        .limit(1)
+        .count()
+    )
+    return dups == 0
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        [(1, None), (1, None)],  # same key, NULL part: duplicate
+        [(1, None), (2, None)],
+        [(None, None), (None, None)],  # all-NULL keys still collide
+        [(1, "a"), (1, None), (None, "a")],
+        [(1, "a"), (1, "a"), (1, "a"), (2, "b")],
+    ],
+)
+def test_compound_unique_matches_grouped_form_on_null_keys(spark, rows):
+    df = spark.createDataFrame(rows, "id long, name string")
+    (res,) = Suite(name="t", compound_unique=[["id", "name"]]).run(df).results
+    assert res.name == "compound_unique:id,name"
+    assert res.success == _old_compound_unique_success(df, ["id", "name"])
+    distinct = len(set(rows))
+    assert res.observed == len(rows) - distinct  # surplus rows
+
+
+def _old_counts(df, not_null, unique, between, min_value):
+    """The former Column-API aggregation, on plain column names."""
+    from pyspark.sql import functions as F
+
+    aggs = [F.count(F.lit(1)).alias("n")]
+    aggs += [F.sum(F.col(c).isNull().cast("long")) for c in not_null]
+    aggs += [F.count(F.col(c)) - F.countDistinct(F.col(c)) for c in unique]
+    aggs += [
+        F.sum((~F.col(c).between(lo, hi) & F.col(c).isNotNull()).cast("long"))
+        for c, (lo, hi) in between
+    ]
+    aggs += [
+        F.sum(((F.col(c) < lo) & F.col(c).isNotNull()).cast("long"))
+        for c, lo in min_value
+    ]
+    return [v or 0 for v in df.agg(*aggs).first()]
+
+
+def test_dq_results_unchanged_for_odd_names_nan_and_bound_types(spark):
+    nan = float("nan")
+    rows = [
+        (1, 0.5, 3, 2.5),
+        (2, nan, 0, -1.0),  # NaN is out of any finite range
+        (2, None, 7, None),
+        (3, 1.0, 11, 9.99),
+        (None, 1.5, -2, 10.0),
+    ]
+    odd = ["my id", "score`x", "int val", "f.v"]
+    plain = ["a", "b", "c", "d"]
+    df_odd = spark.createDataFrame(
+        rows, ", ".join(f"`{c.replace('`', '``')}` {t}" for c, t in
+                        zip(odd, ["long", "double", "int", "double"]))
+    )
+    df_plain = df_odd.toDF(*plain)
+
+    def spec(names):
+        a, b, c, d = names
+        return dict(
+            not_null=[a, b, d],
+            unique=[a, c],
+            between=[(b, (0, 1)), (c, (0.0, 10.0)), (d, (0, 9.99))],
+            min_value=[(c, 0), (d, 0.5), (b, 0)],
+        )
+
+    odd_spec = spec(odd)
+    suite = Suite(
+        name="odd",
+        not_null=odd_spec["not_null"],
+        unique=odd_spec["unique"],
+        between=dict(odd_spec["between"]),
+        min_value=dict(odd_spec["min_value"]),
+        row_count_equals=5,
+    )
+    report = suite.run(df_odd)
+    expected = _old_counts(df_plain, **spec(plain))
+    assert report.row_count == expected[0] == 5
+    assert [r.observed for r in report.results] == expected
+    assert [r.success for r in report.results] == [True] + [
+        v == 0 for v in expected[1:]
+    ]
+    assert report.results[1].name == "not_null:my id"
+
+
+def test_non_numeric_bound_is_rejected(spark):
+    df = spark.createDataFrame([(1,)], "a long")
+    with pytest.raises(TypeError, match="int or finite float"):
+        Suite(name="t", min_value={"a": "0"}).run(df)

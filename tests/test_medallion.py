@@ -19,6 +19,7 @@ from spotify_tracks_etl_portfolio_spark.operators.medallion import (
 from spotify_tracks_etl_portfolio_spark.operators.stats import (
     column_medians,
     column_modes,
+    compute_impute_stats,
 )
 
 SCHEMA = "idx int, track_id string, genre string, score double"
@@ -62,6 +63,61 @@ def test_mode_typed_tie_break_not_string_order(spark):
     assert isinstance(modes["i"], int) and isinstance(modes["d"], float)
 
 
+#: mode columns of every dtype family, with value ties and an all-NULL column
+STATS_SCHEMA = "i int, d double, s string, b boolean, n string, m double"
+STATS_ROWS = [
+    (9, 1.5, "b", True, None, 4.0),
+    (9, 1.5, "b", True, None, None),
+    (10, 0.25, "a", False, None, 1.0),
+    (10, 0.25, "a", False, None, 3.0),
+    (None, None, None, None, None, 2.0),
+]
+
+
+def _python_mode(values):
+    """pandas ``mode().iloc[0]``: most frequent non-null, ties to smallest."""
+    vals = [v for v in values if v is not None]
+    if not vals:
+        return None
+    return min(set(vals), key=lambda v: (-vals.count(v), v))
+
+
+@pytest.mark.parametrize("exact", [True, False])
+def test_fused_stats_equal_separate_medians_and_modes(spark, exact):
+    df = spark.createDataFrame(STATS_ROWS, STATS_SCHEMA)
+    median_cols, mode_cols = ["m", "i", "d"], ["i", "d", "s", "b", "n"]
+    fused = compute_impute_stats(df, median_cols, mode_cols, exact=exact)
+    assert fused == {
+        "medians": column_medians(df, median_cols, exact=exact),
+        "modes": column_modes(df, mode_cols),
+    }
+    # ...and both equal the pandas-semantics values computed in Python
+    cols = STATS_SCHEMA.replace(",", "").split()[::2]
+    by_col = {c: [r[k] for r in STATS_ROWS] for k, c in enumerate(cols)}
+    assert fused["modes"] == {c: _python_mode(by_col[c]) for c in mode_cols}
+    assert fused["modes"]["n"] is None  # all-NULL column
+    assert isinstance(fused["modes"]["i"], int)
+    assert isinstance(fused["modes"]["b"], bool)
+    if exact:
+        import statistics
+
+        assert fused["medians"] == {
+            c: statistics.median(v for v in by_col[c] if v is not None)
+            for c in median_cols
+        }
+
+
+def test_fused_stats_empty_lists_and_one_family(spark):
+    df = spark.createDataFrame(STATS_ROWS, STATS_SCHEMA)
+    assert compute_impute_stats(df, [], []) == {"medians": {}, "modes": {}}
+    assert compute_impute_stats(df, ["m"], []) == {
+        "medians": {"m": 2.5}, "modes": {}
+    }
+    assert compute_impute_stats(df, [], ["s"]) == {
+        "medians": {}, "modes": {"s": "a"}
+    }
+
+
 def test_dedup_keeps_lowest_order_key(bronze):
     out = dedup_first(bronze, "track_id", ["idx"])
     rows = {r["track_id"]: r["idx"] for r in out.collect()}
@@ -81,6 +137,17 @@ def test_impute_and_clamp(bronze):
     assert by_idx[5]["score"] == 1.0  # clamped hi
     assert by_idx[2]["score"] == 0.0  # clamped lo
     assert by_idx[4]["genre"] == "x"  # mode-imputed
+
+
+def test_mode_imputed_and_clamped_column_coalesces_then_clamps(spark):
+    df = spark.createDataFrame(
+        [(1, None), (2, 150), (3, -5), (4, 50)], "id int, k int"
+    )
+    out = impute_and_clamp(df, modes={"k": 500}, clamps={"k": (0, 100)})
+    got = {r["id"]: r["k"] for r in out.collect()}
+    # NULL → mode 500 → clamped to 100; never a NULL left by the clamp
+    assert got == {1: 100, 2: 100, 3: 0, 4: 50}
+    assert dict(out.dtypes)["k"] == "int"
 
 
 def test_silver_transform_two_phase_semantics(bronze):
