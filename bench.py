@@ -70,7 +70,7 @@ HEADLINE = [
     # round-9 continuation: ExactSubstr span detection — the heaviest
     # new dedup plan (stride-1 window explosion; since round 10 the
     # skew-safe groupBy+join default, ~2.2x the window twin by design —
-    # .stress/exactsubstr_r10_probe.json); timing history starts r09,
+    # BENCH_NOTES round 10); timing history starts r09,
     # REBASED at r10 with the formulation change (BASELINE_r10.json)
     "exact_substring_dup_spans",
     # round-10: the composed IVF×PQ serving path and the incremental

@@ -1093,7 +1093,7 @@ def exact_substring_dup_spans(
     (pytest-pinned), it just has no skew cliff — which is why it is
     the default and the window twin survives only as the A/B contrast
     (``use_window_formulation=True``, test/benchmark-only). Measured
-    premium (.stress/exactsubstr_r10_probe.json): ~2.2x over the
+    premium (BENCH_NOTES round 10): ~2.2x over the
     window twin at BOTH 1x and 10x — the cost is the second corpus
     explode + join-side pass, pure linear work that scales
     horizontally, bought against the window's hot-key straggler which

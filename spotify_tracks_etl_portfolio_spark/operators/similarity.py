@@ -860,7 +860,7 @@ def diversity_sample_cells(
 #: The clamp now binds at n = 65536² ≈ 4.3×10⁹ vectors and the re-rank
 #: pool at the bind point is nprobe·√n (nprobe caps at 64), i.e. √n
 #: growth past the OLD wall instead of linear (measured forced-
-#: engagement contrast: tools/ivf_clamp_probe.py, BENCH_NOTES round 9).
+#: engagement contrast: BENCH_NOTES round 9, .stress/ivf_clamp_probe.json).
 #: Past the new bind point, shard the corpus — the same documented
 #: answer as FAISS's IVF sharding. 64 probes is the standard flat-IVF
 #: serving ceiling — with k ∝ √n the probed corpus fraction nprobe/k

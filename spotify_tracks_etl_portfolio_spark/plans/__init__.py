@@ -47,157 +47,6 @@ def register(
     return deco
 
 
-def _round_recorded(n: int) -> bool:
-    """True once a CORRECTNESS artifact of round >= ``n`` exists (or
-    the local-verification override is set) — the trigger the pending
-    registration gates and the deferred force queue share."""
-    import glob
-    import os
-    import re
-
-    if os.environ.get("SPARK_GRAFT_INCLUDE_PENDING") == "1":
-        return True
-    root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    for p in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"_r(\d+)\.json$", p)
-        if m and int(m.group(1)) >= n:
-            return True
-    return False
-
-
-def _round10_recorded() -> bool:
-    return _round_recorded(10)
-
-
-def register_pending_r11(
-    name: str,
-    oracle: str | None,
-    description: str = "",
-    tags: tuple[str, ...] = (),
-):
-    """Decorator: register ``name`` only once the r10 recording window
-    has been spent (CORRECTNESS_r10 on disk) — before that it is a
-    no-op and the function stays a plain tested operator entry point.
-
-    Why: the r10 window is budgeted EXACTLY to retire the r05-era
-    stale cohort (see ``_FORCE_RERECORD``); any debut registered now
-    would enter priority group 2 and push a stale row out. Queries
-    built late in round 10 therefore hold registration until the
-    window is spent, then debut automatically at the head of the r11
-    window (never-recorded = group 2) alongside the promoted deferred
-    force queue — 30 r06-stale + 11 deferred + these debuts still fit
-    r11's 50 slots. Local verification before the artifact lands:
-    ``SPARK_GRAFT_INCLUDE_PENDING=1`` forces registration (used by the
-    pending-query pytest and check_oracle runs)."""
-    if _round10_recorded():
-        return register(name, oracle, description, tags)
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        return fn
-
-    return deco
-
-
-#: Names registered through register_pending_r12 (recorded in BOTH
-#: branches): the r11 window-simulation test excludes them so the
-#: freeze-time "run the suite with the next gate forced open" check
-#: can't redden a test that pins the r11 window shape.
-PENDING_R12_NAMES: list[str] = []
-
-
-def register_pending_r12(
-    name: str,
-    oracle: str | None,
-    description: str = "",
-    tags: tuple[str, ...] = (),
-):
-    """Decorator: register ``name`` only once the r11 recording window
-    has been spent (a CORRECTNESS artifact of round >= 11 on disk) —
-    the same debut-deferral contract as :func:`register_pending_r11`,
-    one round later: the r11 window is budgeted exactly (pending-r11
-    debuts + the promoted deferred force queue + the whole r06 stale
-    cohort = 50), so queries built mid-round-11 hold registration and
-    debut automatically at the head of the r12 window. Local
-    verification: ``SPARK_GRAFT_INCLUDE_PENDING=1`` forces
-    registration (pending-query pytest + check_oracle runs)."""
-    PENDING_R12_NAMES.append(name)
-    if _round_recorded(11):
-        return register(name, oracle, description, tags)
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        return fn
-
-    return deco
-
-
-#: Names registered through register_pending_r13 (recorded in BOTH
-#: branches): window-simulation tests exclude them so the freeze-time
-#: "run the suite with the next gate forced open" check can't redden a
-#: test that pins the r12 window shape.
-PENDING_R13_NAMES: list[str] = []
-
-
-def register_pending_r13(
-    name: str,
-    oracle: str | None,
-    description: str = "",
-    tags: tuple[str, ...] = (),
-):
-    """Decorator: register ``name`` only once the r12 recording window
-    has been spent (a CORRECTNESS artifact of round >= 12 on disk) —
-    the same debut-deferral contract as :func:`register_pending_r12`,
-    one round later: the r12 window is budgeted exactly (5 pending-r12
-    debuts + the promoted r11 deferred re-record + the whole r07 stale
-    cohort + the r08 head = 50), so queries built mid-round-12 hold
-    registration and debut automatically at the head of the r13
-    window. Local verification: ``SPARK_GRAFT_INCLUDE_PENDING=1``
-    forces registration (pending-query pytest + check_oracle runs)."""
-    PENDING_R13_NAMES.append(name)
-    if _round_recorded(12):
-        return register(name, oracle, description, tags)
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        return fn
-
-    return deco
-
-
-#: Names registered through register_pending_r14 (recorded in BOTH
-#: branches): window-simulation tests exclude them so the freeze-time
-#: "run the suite with the next gate forced open" check can't redden a
-#: test that pins the r13 window shape.
-PENDING_R14_NAMES: list[str] = []
-
-
-def register_pending_r14(
-    name: str,
-    oracle: str | None,
-    description: str = "",
-    tags: tuple[str, ...] = (),
-):
-    """Decorator: register ``name`` only once the r13 recording window
-    has been spent (a CORRECTNESS artifact of round >= 13 on disk) —
-    the same debut-deferral contract as :func:`register_pending_r13`,
-    one round later: the r13 window is budgeted exactly (2 pending-r13
-    debuts + the 4 promoted r12 force re-records + the r08 remainder +
-    the r09 head = 50; pinned by
-    ``test_r13_window_promotes_r12_deferred``), so queries built
-    mid-round-13 hold registration and debut automatically at the head
-    of the r14 window. Local verification:
-    ``SPARK_GRAFT_INCLUDE_PENDING=1`` forces registration
-    (pending-query pytest + check_oracle runs)."""
-    PENDING_R14_NAMES.append(name)
-    if _round_recorded(13):
-        return register(name, oracle, description, tags)
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        return fn
-
-    return deco
-
-
 #: The registry's canonical ordering, frozen at the round-12 split of
 #: plans/extensions.py into family modules: registration order is the
 #: final tiebreak of the driver's 50-slot recording window, so it must
@@ -484,62 +333,12 @@ _PRIORITY_UNRECORDED = (
 #: Queries whose IMPLEMENTATION materially changed this round: their old
 #: green row no longer certifies the current code, so they jump the
 #: staleness queue (right behind failures/upgrades) to get re-recorded.
-_FORCE_RERECORD = (
-    # --- round 12. The round-11 force queue (simhash_documents + the
-    # 11 round-10 deferred changed-path consumers) landed green in
-    # CORRECTNESS_r11 (verified name-by-name at round-12 start), so
-    # both queues are CLEARED per the standing per-round hygiene.
-    # This round's 50-slot window: the 5 pending-r12 debuts (group 2)
-    # + exact_substring_new_vs_corpus (_FORCE_RERECORD_AFTER_R11,
-    # group 3) + the WHOLE r07 cohort (29 rows) + the head of r08
-    # (15 of 23) = exactly 50.
-)
-
-#: Round-10 changed-path consumers deferred to the r11 window — all 11
-#: re-recorded green in CORRECTNESS_r11, queue cleared (round-12
-#: hygiene). The historical window-pin tests carry the literal list.
-_FORCE_RERECORD_AFTER_R10 = ()
+_FORCE_RERECORD: tuple[str, ...] = ()
 
 
-#: Round-11 changed-path consumer (the bucketed k-gram serve,
-#: `exact_substring_new_vs_corpus`) re-recorded GREEN in
-#: CORRECTNESS_r12 (verified name-by-name at round-13 start), so the
-#: queue is CLEARED per the standing per-round hygiene. The historical
-#: window-pin test carries the literal name.
-_FORCE_RERECORD_AFTER_R11 = ()
-
-
-#: Round-12 changed-path consumers DEFERRED to the r13 window (the
-#: same self-promoting mechanism): these have a pre-r12 green driver
-#: row that certifies a retired code path, but the r12 window is
-#: budgeted exactly (5 debuts + 1 promoted re-record + the whole r07
-#: cohort + the r08 head = 50), so they promote into the force queue
-#: the moment a CORRECTNESS artifact of round >= 12 exists. SWEEP_r12
-#: certifies them meanwhile.
-_FORCE_RERECORD_AFTER_R12: tuple[str, ...] = (
-    # bucketed corpus MinHash band+shingle serve (plans/extensions.py::
-    # _corpus_minhash_bands_bucketed): rows are bit-identical (oracle
-    # re-verified + plan-gated) but the serve layout both cross-corpus
-    # near-dedup consumers run changed from per-call re-banding to the
-    # persisted bucketed artifacts.
-    "near_dedup_new_vs_corpus",
-    "streaming_near_dedup_sync",
-    # Gopher rule fidelity (round-11 advice): boundary docs now KEEP at
-    # exactly 90%/30% line fractions (<= not <), the symbol rule tests
-    # '#' and ellipsis ratios per symbol, and the signal columns split
-    # (hash_word_ratio + ellipsis_word_ratio replace symbol_word_ratio)
-    # — engine and oracle changed together (parity re-verified), but
-    # the r11 row certifies the old schema/semantics.
-    "gopher_quality_gate_documents",
-)
-
-
-def _recorded_status(max_round: int | None = None) -> dict[str, tuple[int, str]]:
+def _recorded_status() -> dict[str, tuple[int, str]]:
     """``{name: (last_recorded_round, status)}`` from every past round's
-    CORRECTNESS_r*.json (repo root); status ∈ pass|fail|no_oracle.
-    ``max_round`` ignores artifacts newer than that round — used by the
-    window-simulation tests to pin "the state as of round N" so their
-    assertions stay stable after later artifacts land."""
+    CORRECTNESS_r*.json (repo root); status ∈ pass|fail|no_oracle."""
     import glob
     import json
     import os
@@ -550,8 +349,6 @@ def _recorded_status(max_round: int | None = None) -> dict[str, tuple[int, str]]
     for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
         m = re.search(r"_r(\d+)\.json$", path)
         rnd = int(m.group(1)) if m else 0
-        if max_round is not None and rnd > max_round:
-            continue
         try:
             with open(path) as fh:
                 rows = json.load(fh)
@@ -600,20 +397,7 @@ def all_queries() -> dict[str, QuerySpec]:
 
     recorded = _recorded_status()
     prio = {name: i for i, name in enumerate(_PRIORITY_UNRECORDED)}
-    force_seq = _FORCE_RERECORD
-    if any(rnd >= 10 for rnd, _status in recorded.values()):
-        # the r10 window has been spent on the stale cohort — promote
-        # the deferred changed-path consumers into the force queue
-        force_seq = force_seq + _FORCE_RERECORD_AFTER_R10
-    if any(rnd >= 11 for rnd, _status in recorded.values()):
-        # likewise once the r11 window is spent: the r11 changed-path
-        # consumer re-records at the head of the r12 force group
-        force_seq = force_seq + _FORCE_RERECORD_AFTER_R11
-    if any(rnd >= 12 for rnd, _status in recorded.values()):
-        # and once the r12 window is spent: round-12 changed-path
-        # consumers re-record at the head of the r13 force group
-        force_seq = force_seq + _FORCE_RERECORD_AFTER_R12
-    force = {name: i for i, name in enumerate(force_seq)}
+    force = {name: i for i, name in enumerate(_FORCE_RERECORD)}
 
     def sort_key(item: tuple[int, str]) -> tuple[int, int, int, int]:
         idx, name = item

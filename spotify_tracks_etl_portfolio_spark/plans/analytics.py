@@ -561,9 +561,6 @@ def events_overview_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from spotify_tracks_etl_portfolio_spark.plans import register_pending_r11
-
-
 def _type_quantiles_from_cells(vc: DataFrame) -> DataFrame:
     """Rank-select per-group approx median/p99 from mergeable histogram
     cells ``(event_type, b, c)`` — shared by the batch sketch query and
@@ -643,7 +640,7 @@ FROM med JOIN p99 USING (event_type) JOIN vt USING (event_type)
 """
 
 
-@register_pending_r11(
+@register(
     "event_type_value_quantiles_sketch",
     oracle=TYPE_QUANTILES_ORACLE,
     description="PER-GROUP approximate quantiles from the mergeable "

@@ -13,12 +13,7 @@ from pyspark.sql import functions as F
 
 from spotify_tracks_etl_portfolio_spark.functions import rolling_hash, token_count
 
-from spotify_tracks_etl_portfolio_spark.plans import (
-    register_pending_r12,
-    register_pending_r13,
-    register,
-    register_pending_r11,
-)
+from spotify_tracks_etl_portfolio_spark.plans import register
 
 from spotify_tracks_etl_portfolio_spark.sources.readers import read_parquet_table
 
@@ -252,7 +247,7 @@ def leakage_safe_split_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@register_pending_r12(
+@register(
     "curate_training_corpus_v3",
     oracle=f"""
 WITH canon AS (
@@ -820,7 +815,7 @@ def source_quality_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@register_pending_r11(
+@register(
     "temperature_sampled_language_mix",
     oracle=f"""
 WITH c AS (
@@ -1256,7 +1251,7 @@ LIMIT {k}
 
 
 
-@register_pending_r13(
+@register(
     "dsir_resample_documents",
     oracle=_dsir_oracle(),
     description="DSIR-style importance resampling (Xie et al. 2023 — "

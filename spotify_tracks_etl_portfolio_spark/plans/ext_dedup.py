@@ -15,12 +15,7 @@ from pyspark.sql import functions as F
 
 from spotify_tracks_etl_portfolio_spark.functions import rolling_hash, token_count
 
-from spotify_tracks_etl_portfolio_spark.plans import (
-    register_pending_r12,
-    register_pending_r13,
-    register,
-    register_pending_r11,
-)
+from spotify_tracks_etl_portfolio_spark.plans import register
 
 from spotify_tracks_etl_portfolio_spark.sources.readers import (
     read_parquet_memo,
@@ -1452,7 +1447,7 @@ FROM spans
 #: session's shuffle partitions, so the bucket layout never CAPS the
 #: serve join's parallelism below what a shuffle would get (probed:
 #: 8 buckets cost ~11% at 10x for exactly that reason —
-#: .stress/bucketed_kgram_probe_r11.json); at 100 TB size the count so
+#: BENCH_NOTES round 11); at 100 TB size the count so
 #: each bucket file is ~an executor-memory partition.
 _XS_KGRAM_BUCKETS = 32
 
@@ -1502,7 +1497,7 @@ def _corpus_kgram_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Bucket count for the persisted corpus MinHash band + shingle tables —
 #: sized like _XS_KGRAM_BUCKETS (match shuffle parallelism; 8 buckets
 #: measurably capped the bucketed k-gram join's parallelism, probed in
-#: .stress/bucketed_kgram_probe_r11.json). At 100 TB size so each
+#: BENCH_NOTES round 11). At 100 TB size so each
 #: bucket file is ~an executor-memory partition.
 _MH_BAND_BUCKETS = 32
 
@@ -1618,7 +1613,7 @@ def exact_substring_new_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 
-@register_pending_r11(
+@register(
     "exact_substring_cut_new_vs_corpus",
     oracle=f"""
 WITH {_XGRAM_CTES},
@@ -1672,7 +1667,7 @@ def exact_substring_cut_new_vs_corpus(
 
 
 
-@register_pending_r11(
+@register(
     "streaming_incremental_substring_sync",
     oracle=_XS_NEW_VS_CORPUS_ORACLE,
     description="9th streaming gate: the incoming-crawl stream (new "

@@ -18,13 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
-from spotify_tracks_etl_portfolio_spark.plans import (
-    register_pending_r12,
-    register_pending_r13,
-    register_pending_r14,
-    register,
-    register_pending_r11,
-)
+from spotify_tracks_etl_portfolio_spark.plans import register
 
 from spotify_tracks_etl_portfolio_spark.sources.readers import read_parquet_table
 
@@ -388,7 +382,7 @@ def multimodal_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 
-@register_pending_r14(
+@register(
     "multimodal_jpeg_roundtrip",
     oracle=f"""
 WITH d AS (
@@ -434,7 +428,7 @@ def multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@register_pending_r14(
+@register(
     "multimodal_gif_frame_sample",
     oracle=f"""
 WITH gf AS (
@@ -1292,7 +1286,7 @@ def bloom_semi_join_urgent_revenue(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 
-@register_pending_r12(
+@register(
     "streaming_type_quantiles_sync",
     # same oracle VERBATIM as the batch sketch query: micro-batch
     # boundaries cannot change a sum of counter cells

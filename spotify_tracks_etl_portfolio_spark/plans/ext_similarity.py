@@ -15,12 +15,7 @@ from pyspark.sql import functions as F
 
 from spotify_tracks_etl_portfolio_spark.functions import rolling_hash, token_count
 
-from spotify_tracks_etl_portfolio_spark.plans import (
-    register_pending_r12,
-    register_pending_r13,
-    register,
-    register_pending_r11,
-)
+from spotify_tracks_etl_portfolio_spark.plans import register
 
 from spotify_tracks_etl_portfolio_spark.sources.readers import (
     read_parquet_memo,
@@ -920,7 +915,7 @@ def embedding_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@register_pending_r11(
+@register(
     "embedding_ivfpq_filtered_topk",
     oracle=_ivfpq_topk_oracle(
         n_queries=TOPK_N_QUERIES,
@@ -983,7 +978,7 @@ _IVFPQ_APPEND_BATCH = "vec_id % 10 = 7"
 
 
 
-@register_pending_r12(
+@register(
     "embedding_ivfpq_append_topk",
     oracle=_ivfpq_topk_oracle(
         n_queries=TOPK_N_QUERIES,
@@ -1100,7 +1095,7 @@ FROM cc, t
 
 
 
-@register_pending_r12(
+@register(
     "ivfpq_cell_drift",
     oracle=_ivfpq_cell_drift_oracle(),
     description="Index-health monitor for the INCREMENTAL IVFPQ index "

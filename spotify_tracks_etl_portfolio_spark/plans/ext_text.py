@@ -17,13 +17,7 @@ from pyspark.sql import functions as F
 
 from spotify_tracks_etl_portfolio_spark.functions import rolling_hash, token_count
 
-from spotify_tracks_etl_portfolio_spark.plans import (
-    register_pending_r12,
-    register_pending_r13,
-    register_pending_r14,
-    register,
-    register_pending_r11,
-)
+from spotify_tracks_etl_portfolio_spark.plans import register
 
 from spotify_tracks_etl_portfolio_spark.sources.readers import read_parquet_table
 
@@ -601,7 +595,7 @@ CCNET_BIN = 1 << 9
 
 
 
-@register_pending_r12(
+@register(
     "ccnet_perplexity_buckets",
     oracle=f"""
 WITH {_BIGRAM_LP_CTES},
@@ -979,7 +973,7 @@ LIMIT {_tx.UNIGRAM_VOCAB_SIZE}
     )
 
 
-@register_pending_r14(
+@register(
     "unigram_train_vocab_documents",
     oracle=_unigram_vocab_oracle(),
     description="Unigram-LM (SentencePiece-style) tokenizer training "
@@ -1051,7 +1045,7 @@ FROM documents d LEFT JOIN (
     )
 
 
-@register_pending_r14(
+@register(
     "unigram_segment_documents",
     oracle=_unigram_segment_oracle(),
     description="Unigram-LM tokenizer INFERENCE — the serving half of "
@@ -1073,7 +1067,7 @@ def unigram_segment_documents(
     return _tx.unigram_segment_counts(docs, "doc_id", "text", lp)
 
 
-@register_pending_r14(
+@register(
     "unigram_segment_documents_served",
     oracle=_unigram_segment_oracle(),
     description="Served-artifact twin of unigram_segment_documents "
@@ -1153,7 +1147,7 @@ FROM cm
 """
 
 
-@register_pending_r14(
+@register(
     "quality_classifier_documents",
     oracle=_classifier_oracle(),
     description="Classifier-based quality filtering — the third "
@@ -1268,7 +1262,7 @@ FROM c4s
 """
 
 
-@register_pending_r14(
+@register(
     "c4_line_gate_documents",
     oracle=_c4_gate_oracle(),
     description="C4-style rule-based cleaning (Raffel et al. 2020, "
@@ -1343,7 +1337,7 @@ def _bpe_segment_counts(docs: DataFrame, merges) -> DataFrame:
 
 
 
-@register_pending_r11(
+@register(
     "bpe_segment_documents_served",
     oracle=_bpe_segment_oracle(10),
     description="SERVED BPE segmentation: the trained merge table — the "
@@ -2047,7 +2041,7 @@ ORDER BY bm25 DESC, doc_id LIMIT 20
 """
 
 
-@register_pending_r13(
+@register(
     "bm25_index_search_incremental",
     oracle=_bm25_incr_oracle(),
     description="BM25 served from a persisted inverted index AFTER an "

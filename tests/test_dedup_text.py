@@ -1509,7 +1509,7 @@ def test_curate_v2_gates_and_composition(spark, sf_dir):
 
 
 def test_temperature_mix_upweights_small_languages(spark, sf_dir):
-    """The α=1/2 temperature mix (pending r11 debut — invoked directly):
+    """The α=1/2 temperature mix (invoked directly on the operator):
     keep RATES are ∝ n^(−1/2), so every smaller language keeps a
     strictly higher fraction than every larger one; the total kept is
     within hash-uniformity noise of the ⌈N/2⌉ budget; and a rerun is

@@ -326,7 +326,7 @@ SANCTIONED_NESTED_LOOP = {
     "events_overview_approx": "five 1-row sketch-cell aggregates "
     "(HLL estimates, histogram quantiles, count) cross-composed into "
     "the single output row",
-    # round 11 (pending-r11 debuts, gate opened by CORRECTNESS_r10)
+    # round 11
     "embedding_ivfpq_filtered_topk": "the same bounded query-set × "
     "codebook ADC-LUT broadcast cross as embedding_ivfpq_topk "
     "(similarity.py _pq_adc_join) — the pre-filter only shrinks the "
@@ -334,7 +334,6 @@ SANCTIONED_NESTED_LOOP = {
     "temperature_sampled_language_mix": "1-row corpus-totals broadcast "
     "onto the per-language table (plans/extensions.py) — the standard "
     "scalar-denominator shape sanctioned a dozen times above",
-    # round 11 (pending-r12 debut, verified under the forced-open gate)
     "embedding_ivfpq_append_topk": "the same bounded query-set × "
     "codebook ADC-LUT broadcast cross as embedding_ivfpq_topk — the "
     "incremental index serves through the identical query path; "
@@ -350,14 +349,20 @@ SANCTIONED_NESTED_LOOP = {
 }
 
 
-def test_no_registered_query_plans_unsanctioned_nested_loop(spark, sf_dir):
+@pytest.fixture(scope="module")
+def registry_plans(spark, sf_dir) -> dict[str, str]:
+    """``{name: executed plan}`` of every registered query, planned once
+    for the registry-wide invariants below."""
+    return {name: plan_of(spark, name, sf_dir) for name in sorted(all_queries())}
+
+
+def test_no_registered_query_plans_unsanctioned_nested_loop(registry_plans):
     """Global scale invariant: a CartesianProduct or
     BroadcastNestedLoopJoin in ANY registered query is a |n|² pair-space
     scan at 100 TB unless the build side is provably tiny — every
     occurrence must be on the sanctioned list with its justification."""
     offenders = {}
-    for name, spec in sorted(all_queries().items()):
-        plan = plan_of(spark, name, sf_dir)
+    for name, plan in registry_plans.items():
         if "CartesianProduct" in plan:
             offenders[name] = "CartesianProduct"
         elif "BroadcastNestedLoopJoin" in plan and name not in SANCTIONED_NESTED_LOOP:
@@ -391,17 +396,16 @@ def _plan_nodes(plan: str) -> list[tuple[int, str]]:
     return nodes
 
 
-def test_no_registered_query_single_partitions_raw_input(spark, sf_dir):
+def test_no_registered_query_single_partitions_raw_input(registry_plans):
     """Global scale invariant (round-3 verdict item): an ``Exchange
     SinglePartition`` whose subtree has no aggregation / rank-limit /
     literal input moves the ENTIRE input to one task — the
     unpartitioned-window OOM at 100 TB.  Every single-partition exchange
     in every registered query must sit above bounded input."""
     offenders = {}
-    for name, spec in sorted(all_queries().items()):
+    for name, plan in registry_plans.items():
         if name.startswith("streaming_"):
             continue  # streams drain in their own gates; plans differ
-        plan = plan_of(spark, name, sf_dir)
         nodes = _plan_nodes(plan)
         for i, (d, txt) in enumerate(nodes):
             if "Exchange SinglePartition" not in txt:
@@ -511,8 +515,7 @@ def test_quality_classifier_zero_shuffle_projection(spark, sf_dir):
     """The linear quality classifier's scale claim: one scan, pure
     projection — no exchange, no join, no aggregation node (the margin
     fold is an expression, not a physical aggregate). Invoked directly
-    (registration-independent — the pending-r14 gate may be closed in
-    this suite state)."""
+    on the operator."""
     from spotify_tracks_etl_portfolio_spark.operators import text as tx
     from spotify_tracks_etl_portfolio_spark.sources.readers import (
         read_parquet_table,
@@ -529,8 +532,7 @@ def test_quality_classifier_zero_shuffle_projection(spark, sf_dir):
 def test_c4_line_gate_zero_shuffle_projection(spark, sf_dir):
     """The C4 gate's scale claim: page synthesis + line filter + page
     verdicts compose into ONE scan and pure projections — no exchange,
-    no join, no aggregate. Invoked directly (registration-independent
-    — the pending-r14 gate may be closed in this suite state)."""
+    no join, no aggregate. Invoked directly on the operator."""
     from spotify_tracks_etl_portfolio_spark.operators import text as tx
     from spotify_tracks_etl_portfolio_spark.sources.readers import (
         read_parquet_table,
@@ -546,8 +548,7 @@ def test_c4_line_gate_zero_shuffle_projection(spark, sf_dir):
 
 
 def test_bpe_merge_artifact_served_equals_trained(spark, sf_dir):
-    """Pending r11 debut (invoked directly — registration-independent):
-    the persisted BPE merge-table artifact serves segmentation
+    """The persisted BPE merge-table artifact serves segmentation
     identically to per-call training (zero-RNG trainer ⇒ the artifact
     changes cost, never the answer), and a second serve reuses the
     artifact without rebuilding."""
@@ -812,23 +813,17 @@ def test_dsir_scoring_is_projection_plus_topk(spark, sf_dir):
     pure projection — the returned plan must contain no join, no
     aggregate exchange, and take its top-k via TakeOrderedAndProject,
     never a global range sort."""
-    import os
+    from pyspark.sql import functions as F
 
-    os.environ["SPARK_GRAFT_INCLUDE_PENDING"] = "1"
-    try:
-        from spotify_tracks_etl_portfolio_spark.plans.ext_curation import (
-            dsir_importance_scores,
-        )
-        from spotify_tracks_etl_portfolio_spark.sources.readers import (
-            read_parquet_table,
-        )
-        from pyspark.sql import functions as F
+    from spotify_tracks_etl_portfolio_spark.plans.ext_curation import (
+        dsir_importance_scores,
+    )
+    from spotify_tracks_etl_portfolio_spark.sources.readers import (
+        read_parquet_table,
+    )
 
-        docs = read_parquet_table(spark, sf_dir, "documents")
-        df = dsir_importance_scores(docs, F.col("lang") == "en")
-        plan = plan_of_df(df)
-    finally:
-        os.environ.pop("SPARK_GRAFT_INCLUDE_PENDING", None)
+    docs = read_parquet_table(spark, sf_dir, "documents")
+    plan = plan_of_df(dsir_importance_scores(docs, F.col("lang") == "en"))
     assert "TakeOrderedAndProject" in plan
     assert "rangepartitioning" not in plan
     assert "Join" not in plan
@@ -1137,10 +1132,6 @@ def test_persisted_index_artifacts_reused_across_calls(spark, sf_dir):
     )
     qs = all_queries()
     for qname, artifact, marker, keysuffix in cases:
-        if qname not in qs:
-            # pending-gated debut in the normal (gate-closed) suite
-            # state — the forced-open freeze run covers it
-            continue
         if keysuffix == "|SEMX|":
             keysuffix = f"|new<{SEMX_NEW_MAX}|k={semx_k}|iters=3"
         first = qs[qname].fn(spark, sf_dir).collect()

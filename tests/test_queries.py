@@ -258,370 +258,97 @@ def test_width_parametric_oracles_generalize_beyond_registered_widths(
     assert got_pairs == want_pairs
 
 
-def test_pending_r11_registration_gate(monkeypatch):
-    """The round-10 pending-debut gate: the two late-r10 queries stay
-    UNREGISTERED until a CORRECTNESS artifact of round >= 10 exists
-    (protecting the r10 window's stale-cohort budget), then debut
-    automatically (never-recorded = priority group 2). The decorator's
-    both branches are exercised directly; the module-level outcome is
-    asserted against whatever the checkout's artifact state implies."""
+def _rotation_under_fake_status(monkeypatch):
+    """Only the first 50 registry entries get a correctness record each
+    round, so ``all_queries()`` orders by urgency: failed row → rows-only row of a
+    query that now has an oracle → never recorded (priority list first)
+    → force re-record queue → stalest recorded round first, with the
+    canonical registry order as the final tiebreak.
+
+    Patches a synthetic recorded status and a one-name force queue, and
+    returns the resulting order plus the expected head of it."""
     from spotify_tracks_etl_portfolio_spark import plans
 
-    pending = {
-        "embedding_ivfpq_filtered_topk",
-        "exact_substring_cut_new_vs_corpus",
-        "streaming_incremental_substring_sync",
-        "event_type_value_quantiles_sketch",
-        "bpe_segment_documents_served",
-        "temperature_sampled_language_mix",
-    }
-    monkeypatch.delenv("SPARK_GRAFT_INCLUDE_PENDING", raising=False)
-    qs = set(plans.all_queries())
-    if plans._round10_recorded():
-        # post-r10 checkout (or the import ran with the override):
-        # the debuts must be live ONLY if the import-time gate saw it
-        assert pending <= qs or not (pending & qs)
-    else:
-        assert not (pending & qs)
-    # decorator behavior, both branches, via a throwaway name
-    monkeypatch.setenv("SPARK_GRAFT_INCLUDE_PENDING", "1")
-    assert plans._round10_recorded()
+    names = list(plans.all_queries())
+    fresh = [
+        n for n in plans._CANONICAL_ORDER
+        if n not in plans._PRIORITY_UNRECORDED
+    ]
+    failed, upgraded, unlisted, forced, stale_a, stale_b, stale_c = fresh[:7]
+    listed = plans._PRIORITY_UNRECORDED[3]
+    fake = {n: (14, "pass") for n in names}
+    fake[failed] = (13, "fail")
+    fake[upgraded] = (12, "no_oracle")
+    del fake[unlisted], fake[listed]
+    fake[forced] = (14, "pass")  # newest row, yet ahead of every stale one
+    # stale_a and stale_b tie on round: canonical order decides
+    fake[stale_a] = (5, "pass")
+    fake[stale_b] = (5, "pass")
+    fake[stale_c] = (7, "pass")
+    monkeypatch.setattr(plans, "_recorded_status", lambda: fake)
+    monkeypatch.setattr(plans, "_FORCE_RERECORD", (forced,))
 
-    @plans.register_pending_r11("___pending_probe", oracle=None)
-    def _probe(spark, sf_dir):  # pragma: no cover - never executed
-        raise AssertionError
-
-    assert "___pending_probe" in plans.QUERIES
-    del plans.QUERIES["___pending_probe"]
-    monkeypatch.delenv("SPARK_GRAFT_INCLUDE_PENDING", raising=False)
+    head = [failed, upgraded, listed, unlisted, forced, stale_a, stale_b, stale_c]
+    return list(plans.all_queries()), head
 
 
-def test_pending_r12_registration_gate(monkeypatch):
-    """The round-11 pending-debut gate (same contract as the r11 one,
-    one round later): late-r11 queries stay unregistered until a
-    CORRECTNESS artifact of round >= 11 exists, protecting the r11
-    window's exact 50-slot budget (8 debuts + 12 force + 30 r06)."""
+def test_rotation_unrecorded_before_force_queue(monkeypatch):
+    """Failed, then upgraded, then never-recorded rows (priority list
+    first) all precede the force re-record queue."""
+    ordered, head = _rotation_under_fake_status(monkeypatch)
+    assert ordered[:5] == head[:5]
+
+
+def test_rotation_force_queue_before_stalest_round(monkeypatch):
+    """A force-queued name with the newest recorded round still precedes
+    every stale recorded row, which then follow stalest round first."""
+    ordered, head = _rotation_under_fake_status(monkeypatch)
+    assert ordered[4:8] == head[4:8]
+
+
+def test_rotation_stalest_round_first_canonical_tiebreak(monkeypatch):
+    """Stale rows sort by recorded round, ties by canonical order; every
+    other name, including ones no longer force-queued, keeps canonical
+    registry order after them."""
     from spotify_tracks_etl_portfolio_spark import plans
 
-    pending = set(plans.PENDING_R12_NAMES)
-    assert "embedding_ivfpq_append_topk" in pending
-    monkeypatch.delenv("SPARK_GRAFT_INCLUDE_PENDING", raising=False)
-    qs = set(plans.all_queries())
-    # registration is decided at IMPORT time (artifact on disk or the
-    # override env var), so the debuts are either ALL live or ALL held
-    assert pending <= qs or not (pending & qs)
-    if not plans._round_recorded(11):
-        # with no r11 artifact NOW, live debuts can only mean the
-        # import ran under the override — never a partial registration
-        assert pending <= qs or not (pending & qs)
-    monkeypatch.setenv("SPARK_GRAFT_INCLUDE_PENDING", "1")
-    assert plans._round_recorded(11)
-
-    @plans.register_pending_r12("___pending_probe12", oracle=None)
-    def _probe(spark, sf_dir):  # pragma: no cover - never executed
-        raise AssertionError
-
-    assert "___pending_probe12" in plans.QUERIES
-    del plans.QUERIES["___pending_probe12"]
-    plans.PENDING_R12_NAMES.remove("___pending_probe12")
-    monkeypatch.delenv("SPARK_GRAFT_INCLUDE_PENDING", raising=False)
+    ordered, head = _rotation_under_fake_status(monkeypatch)
+    assert ordered[: len(head)] == head
+    canon = set(plans._CANONICAL_ORDER)
+    tail = [n for n in plans._CANONICAL_ORDER if n not in head] + [
+        n for n in plans.QUERIES if n not in canon and n not in head
+    ]
+    assert ordered[len(head):] == tail
 
 
-def test_pending_r13_registration_gate(monkeypatch):
-    """The round-12 pending-debut gate (same contract as the r12 one,
-    one round later): late-r12 queries stay unregistered until a
-    CORRECTNESS artifact of round >= 12 exists, protecting the r12
-    window's exact 50-slot budget (5 debuts + 1 promoted re-record +
-    the whole r07 cohort + the r08 head)."""
-    from spotify_tracks_etl_portfolio_spark import plans
-
-    pending = set(plans.PENDING_R13_NAMES)
-    monkeypatch.delenv("SPARK_GRAFT_INCLUDE_PENDING", raising=False)
-    qs = set(plans.all_queries())
-    # registration is decided at IMPORT time (artifact on disk or the
-    # override env var), so the debuts are either ALL live or ALL held
-    assert pending <= qs or not (pending & qs)
-    monkeypatch.setenv("SPARK_GRAFT_INCLUDE_PENDING", "1")
-    assert plans._round_recorded(12)
-
-    @plans.register_pending_r13("___pending_probe13", oracle=None)
-    def _probe(spark, sf_dir):  # pragma: no cover - never executed
-        raise AssertionError
-
-    assert "___pending_probe13" in plans.QUERIES
-    del plans.QUERIES["___pending_probe13"]
-    plans.PENDING_R13_NAMES.remove("___pending_probe13")
-    monkeypatch.delenv("SPARK_GRAFT_INCLUDE_PENDING", raising=False)
-
-
-def test_pending_r14_registration_gate(monkeypatch):
-    """The round-13 pending-debut gate (same contract as the r13 one,
-    one round later): late-r13 queries stay unregistered until a
-    CORRECTNESS artifact of round >= 13 exists, protecting the r13
-    window's exact 50-slot budget (2 debuts + 4 promoted force
-    re-records + the r08 remainder + the r09 head)."""
-    from spotify_tracks_etl_portfolio_spark import plans
-
-    pending = set(plans.PENDING_R14_NAMES)
-    monkeypatch.delenv("SPARK_GRAFT_INCLUDE_PENDING", raising=False)
-    qs = set(plans.all_queries())
-    # registration is decided at IMPORT time (artifact on disk or the
-    # override env var), so the debuts are either ALL live or ALL held
-    assert pending <= qs or not (pending & qs)
-    if not plans._round_recorded(13):
-        assert not (pending & qs) or pending <= qs
-    monkeypatch.setenv("SPARK_GRAFT_INCLUDE_PENDING", "1")
-    assert plans._round_recorded(13)
-
-    @plans.register_pending_r14("___pending_probe14", oracle=None)
-    def _probe(spark, sf_dir):  # pragma: no cover - never executed
-        raise AssertionError
-
-    assert "___pending_probe14" in plans.QUERIES
-    del plans.QUERIES["___pending_probe14"]
-    plans.PENDING_R14_NAMES.remove("___pending_probe14")
-    monkeypatch.delenv("SPARK_GRAFT_INCLUDE_PENDING", raising=False)
-
-
-# The round-11 force queue as it stood when CORRECTNESS_r11 was
-# recorded (cleared from plans/__init__.py at round-12 start per the
-# per-round hygiene — this literal pins the historical handoff).
-_R11_FORCE_QUEUE = (
-    "simhash_documents",
-    # round-10 deferred changed-path consumers (_FORCE_RERECORD_AFTER_R10)
-    "exact_substring_dup_spans",
-    "exact_substring_dedup_documents",
-    "curate_training_corpus_v2",
-    "bpe_train_merges_documents",
-    "bpe_segment_documents",
-    "cowtable_merge_roundtrip",
-    "cowtable_snapshot_diff",
-    "cow_incremental_rollup",
-    "streaming_cow_upsert_sync",
-    "cowtable_zorder_pruned_scan",
-    "cowtable_bloom_point_lookup",
-)
-
-
-def test_r11_window_landed_as_pinned():
-    """The r11 handoff is now HISTORY: CORRECTNESS_r11.json must contain
-    exactly what the round-11 window pin predicted — the promoted force
-    queue (simhash + the 11 r10-deferred changed-path consumers, the
-    literal above) all green, every row green, and no registered
-    query's latest row older than r07 afterwards. This is the artifact
-    the round-12 queue-clearing hygiene is justified by."""
+def test_registry_does_not_depend_on_artifacts(tmp_path):
+    """A copy of the package with no ``CORRECTNESS_r*.json`` beside it,
+    imported from a foreign cwd, registers exactly the same queries:
+    recorded artifacts order the registry, they never gate it."""
     import json
     import os
+    import shutil
+    import subprocess
+    import sys
+    from pathlib import Path
 
     from spotify_tracks_etl_portfolio_spark import plans
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "CORRECTNESS_r11.json")) as fh:
-        r11 = json.load(fh)
-    assert len(r11) == 50
-    for name in _R11_FORCE_QUEUE:
-        row = r11.get(name)
-        assert row is not None, f"{name} missing from CORRECTNESS_r11"
-        assert row["hash_match"] and row["rows_match"], name
-    assert all(v["hash_match"] and v["rows_match"] for v in r11.values())
-    # the queues those rows certify are cleared (round-12 hygiene)
-    assert plans._FORCE_RERECORD == ()
-    assert plans._FORCE_RERECORD_AFTER_R10 == ()
-    # staleness floor: no registered query's latest row older than r07
-    plans.all_queries()  # side-effect: populate QUERIES
-    rec = plans._recorded_status(max_round=11)
-    stale = [
-        (n, r) for n, (r, _s) in rec.items()
-        if n in plans.QUERIES and r < 7
-    ]
-    assert stale == [], stale
-
-
-# The round-12 force queue as it stood when CORRECTNESS_r12 was
-# recorded (cleared from plans/__init__.py at round-13 start per the
-# per-round hygiene — this literal pins the historical handoff).
-_R12_FORCE_QUEUE = ("exact_substring_new_vs_corpus",)
-
-
-def test_r12_window_landed_as_pinned():
-    """The r12 handoff is now HISTORY: CORRECTNESS_r12.json must contain
-    exactly what the round-12 window pin predicted — the 5 pending-r12
-    debuts, the promoted r11 force queue (the bucketed k-gram serve,
-    the literal above) all green, every row green, and no registered
-    query's latest row older than r08 afterwards. This is the artifact
-    the round-13 queue-clearing hygiene is justified by."""
-    import json
-    import os
-
-    from spotify_tracks_etl_portfolio_spark import plans
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "CORRECTNESS_r12.json")) as fh:
-        r12 = json.load(fh)
-    assert len(r12) == 50
-    for name in _R12_FORCE_QUEUE + tuple(plans.PENDING_R12_NAMES):
-        row = r12.get(name)
-        assert row is not None, f"{name} missing from CORRECTNESS_r12"
-        assert row["hash_match"] and row["rows_match"], name
-    assert all(v["hash_match"] and v["rows_match"] for v in r12.values())
-    # the queue those rows certify is cleared (round-13 hygiene)
-    assert plans._FORCE_RERECORD == ()
-    assert plans._FORCE_RERECORD_AFTER_R10 == ()
-    assert plans._FORCE_RERECORD_AFTER_R11 == ()
-    # staleness floor: no registered query's latest row older than r08
-    plans.all_queries()  # side-effect: populate QUERIES
-    rec = plans._recorded_status(max_round=12)
-    stale = [
-        (n, r) for n, (r, _s) in rec.items()
-        if n in plans.QUERIES and r < 8
-    ]
-    assert stale == [], stale
-
-
-def test_r12_window_promotes_r11_deferred(monkeypatch):
-    """Pin the r12 window against the REAL recorded state as of the r11
-    artifact landing (``_recorded_status(max_round=11)`` — stable after
-    CORRECTNESS_r12+ land): the 5 pending-r12 debuts lead (group 2,
-    never recorded), the r11 changed-path consumer (the bucketed k-gram
-    serve — the _R12_FORCE_QUEUE literal; the live tuple was cleared at
-    round-13 start after its r12 row landed green) promotes into the
-    force group, and the remaining slots go stalest-first — the WHOLE
-    r07 cohort (29 rows) before any r08 row. Pending-r13 debuts are
-    excluded: they are unregistered as of the r11 state this test pins,
-    but the freeze-time forced-open gate registers them."""
-    from spotify_tracks_etl_portfolio_spark import plans
-
-    as_of_r11 = plans._recorded_status(max_round=11)
-    monkeypatch.setattr(plans, "_recorded_status", lambda: as_of_r11)
-    monkeypatch.setattr(plans, "_FORCE_RERECORD_AFTER_R11", _R12_FORCE_QUEUE)
-    ordered = [
-        n for n in plans.all_queries()
-        if n not in plans.PENDING_R13_NAMES
-        and n not in plans.PENDING_R14_NAMES
-    ]
-    window = ordered[:50]
-    # the five pending-r12 debuts are registered (the r11 artifact is
-    # on disk) and never recorded as of r11 → they lead the window
-    debuts = [n for n in window if n not in as_of_r11]
-    assert set(debuts) == set(plans.PENDING_R12_NAMES), debuts
-    assert window[: len(debuts)] == debuts, window[:8]
-    # the promoted r11 deferred re-record is next (force group)
-    assert set(_R12_FORCE_QUEUE) <= set(window)
-    assert window[len(debuts)] == "exact_substring_new_vs_corpus"
-    # remaining slots go stalest-first: the WHOLE r07 cohort plus the
-    # head of r08 — never anything younger while an older cohort is
-    # incomplete
-    rest = [
-        n for n in window
-        if n not in _R12_FORCE_QUEUE and n in as_of_r11
-    ]
-    rounds = [as_of_r11[n][0] for n in rest]
-    assert set(rounds) <= {7, 8}, set(rounds)
-    assert rounds.count(7) == sum(
-        1 for n, (r, _s) in as_of_r11.items()
-        if r == 7 and n in plans.QUERIES
-    ), "an r07 row was left out while r08 rows got slots"
-
-
-def test_r13_window_promotes_r12_deferred(monkeypatch):
-    """One round ahead: once the predicted r12 window records (all
-    green), the round-12 changed-path consumers
-    (_FORCE_RERECORD_AFTER_R12) must promote into the force group and
-    land inside the r13 window, with the remaining slots going
-    stalest-first — the r08 remainder cohort before any r09 row.
-    Registration-state agnostic: pending-r13 debuts (if the import saw
-    the gate open) occupy head slots and are excluded here."""
-    from spotify_tracks_etl_portfolio_spark import plans
-
-    as_of_r11 = plans._recorded_status(max_round=11)
-    monkeypatch.setattr(plans, "_recorded_status", lambda: as_of_r11)
-    # replay history: the r12 window was computed while the (since
-    # cleared) r11 force queue was still live
-    monkeypatch.setattr(plans, "_FORCE_RERECORD_AFTER_R11", _R12_FORCE_QUEUE)
-    r12_window = [
-        n for n in plans.all_queries()
-        if n not in plans.PENDING_R13_NAMES
-        and n not in plans.PENDING_R14_NAMES
-    ][:50]
-    fake = dict(as_of_r11)
-    for n in r12_window:
-        fake[n] = (12, "pass")
-    # the r13 window runs on the LIVE code: the r11 queue cleared at
-    # round-13 start (its r12 row is green), only the r12 queue promotes
-    monkeypatch.setattr(plans, "_FORCE_RERECORD_AFTER_R11", ())
-    monkeypatch.setattr(plans, "_recorded_status", lambda: fake)
-    window = [
-        n for n in plans.all_queries()
-        if n not in plans.PENDING_R13_NAMES
-        and n not in plans.PENDING_R14_NAMES
-    ][:50]
-    assert set(plans._FORCE_RERECORD_AFTER_R12) <= set(window), sorted(
-        set(plans._FORCE_RERECORD_AFTER_R12) - set(window)
+    pkg = Path(plans.__file__).resolve().parents[1]
+    shutil.copytree(
+        pkg, tmp_path / pkg.name,
+        ignore=shutil.ignore_patterns("__pycache__"),
     )
-    # the spent re-record must NOT burn a second slot: its r12 row is
-    # green and the cleared queue leaves it in the stalest-first pool
-    assert "exact_substring_new_vs_corpus" not in window
-    force_names = (
-        set(plans._FORCE_RERECORD)
-        | set(plans._FORCE_RERECORD_AFTER_R12)
+    code = (
+        "import json, sys; sys.path.insert(0, sys.argv[1]); "
+        f"from {pkg.name}.plans import all_queries; "
+        "print(json.dumps(sorted(all_queries())))"
     )
-    rest = [n for n in window if n not in force_names and n in fake]
-    rounds = [fake[n][0] for n in rest]
-    # r08 remainder (8 rows) + r09 head fill the rest of the window
-    assert set(rounds) <= {8, 9}, set(rounds)
-    assert rounds.count(8) == sum(
-        1 for n, (r, _s) in fake.items() if r == 8 and n in plans.QUERIES
-    ), "an r08 row was left out while r09 rows got slots"
-
-
-def test_r14_window_debuts_and_stalest_first(monkeypatch):
-    """One round ahead: once the predicted r13 window records all green
-    (the 2 pending-r13 debuts lead, the r12 force group re-records, the
-    r08 remainder + r09 head retire), the r14 window carries NO force
-    entries — the r12 queue names all own green r13 rows, and the
-    round-14 hygiene clears the tuple so none re-burns a slot — and the
-    non-debut slots go purely stalest-first: the r09 remainder before
-    any r10 row. Pending-r14 debuts (the JPEG roundtrip and the unigram
-    trainer/segmenter) occupy head slots and are excluded here."""
-    import pytest as _pytest
-
-    from spotify_tracks_etl_portfolio_spark import plans
-
-    if any(n not in plans.all_queries() for n in plans.PENDING_R13_NAMES):
-        _pytest.skip("pending-r13 debuts not registered in this state")
-    as_of_r12 = plans._recorded_status(max_round=12)
-    monkeypatch.setattr(plans, "_recorded_status", lambda: as_of_r12)
-    r13_window = [
-        n for n in plans.all_queries()
-        if n not in plans.PENDING_R14_NAMES
-    ][:50]
-    # sanity: the pending-r13 debuts really lead that window
-    assert set(plans.PENDING_R13_NAMES) <= set(
-        r13_window[: len(plans.PENDING_R13_NAMES)]
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code, str(tmp_path)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, check=True,
     )
-    fake = dict(as_of_r12)
-    for n in r13_window:
-        fake[n] = (13, "pass")
-    # the r14 window runs with the r12 queue cleared (round-14 hygiene)
-    monkeypatch.setattr(plans, "_FORCE_RERECORD_AFTER_R12", ())
-    monkeypatch.setattr(plans, "_recorded_status", lambda: fake)
-    window = [
-        n for n in plans.all_queries()
-        if n not in plans.PENDING_R14_NAMES
-    ][:50]
-    # none of the spent r12 force names re-burns a slot
-    for n in (
-        "near_dedup_new_vs_corpus",
-        "streaming_near_dedup_sync",
-        "gopher_quality_gate_documents",
-    ):
-        assert n not in window, n
-    rounds = [fake[n][0] for n in window if n in fake]
-    assert set(rounds) <= {9, 10}, set(rounds)
-    assert rounds.count(9) == min(
-        len(rounds),
-        sum(
-            1 for n, (r, _s) in fake.items()
-            if r == 9 and n in plans.QUERIES
-        ),
-    ), "an r09 row was left out while r10 rows got slots"
+    assert set(json.loads(out.stdout.splitlines()[-1])) == set(
+        plans.all_queries()
+    )

@@ -237,8 +237,8 @@ def test_approx_sketches_within_error_bounds(spark, sf_dir):
 
 
 def test_grouped_quantile_sketch_within_error_bounds(spark, sf_dir):
-    """The per-group histogram-quantile sketch (pending r11 debut —
-    invoked directly, registration-independent): every event_type's
+    """The per-group histogram-quantile sketch (invoked directly on
+    the operator): every event_type's
     median and p99 estimates land within one bin width of the exact
     per-group percentiles, and per-group counts are exact."""
     from spotify_tracks_etl_portfolio_spark.plans.analytics import (

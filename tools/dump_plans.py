@@ -2,16 +2,26 @@
 with its shuffle/scan/codegen profile — the at-scale story of each plan,
 readable without running Spark.
 
-Usage: python tools/dump_plans.py  (writes PLANS.md at the repo root)
+Usage:
+  python tools/dump_plans.py
+      writes PLANS.md at the repo root
+  python tools/dump_plans.py --out plans/rN <suffix> [name ...]
+      writes `.explain("formatted")` of each query to
+      plans/rN/<query>_<suffix>.txt (suffix e.g. "before" / "after";
+      names default to the full bench HEADLINE list) — the before/after
+      plan files an optimization write-up cites
+Relative ``--out`` paths resolve against the repo root.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bench import HEADLINE  # noqa: E402
 from spotify_tracks_etl_portfolio_spark.plans import all_queries  # noqa: E402
@@ -71,7 +81,26 @@ SCALE_PATH = [
 ]
 
 
-def main() -> None:
+def dump_formatted(out_dir: str, suffix: str, names: list[str]) -> None:
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark("plans")
+    specs = all_queries()
+    for name in names:
+        spec = specs.get(name)
+        if spec is None:
+            print(f"skip {name}: not registered")
+            continue
+        df = spec.fn(spark, SF_DIR)
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as fh:
+            fh.write(plan)
+        print(f"wrote {path}")
+
+
+def write_plans_md() -> None:
     spark = get_spark("plans")
     specs = all_queries()
     out = [
@@ -117,10 +146,28 @@ def main() -> None:
     ]
     for name in [n for n in SCALE_PATH if n not in HEADLINE]:
         emit(name)
-    with open(os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--out", help="directory for per-query formatted plans")
+    ap.add_argument("suffix", nargs="?", help="file suffix, with --out")
+    ap.add_argument("names", nargs="*", help="queries (default: HEADLINE)")
+    args = ap.parse_args()
+    if args.out is None:
+        if args.suffix is not None:
+            ap.error("a suffix needs --out")
+        write_plans_md()
+    elif args.suffix is None:
+        ap.error("--out needs a suffix")
+    else:
+        dump_formatted(
+            os.path.join(REPO, args.out), args.suffix,
+            args.names or list(HEADLINE),
+        )
 
 
 if __name__ == "__main__":
