@@ -258,16 +258,3 @@ def spotify_silver_suite() -> Suite:
         },
         row_count_min=1,
     )
-
-
-def events_silver_suite() -> Suite:
-    """The same expectation families mapped onto the events analogue."""
-    return Suite(
-        name="suite_events_silver",
-        unique=["event_id"],
-        compound_unique=[["event_id", "ts"]],
-        not_null=["event_id", "ts", "user_id", "event_type", "value"],
-        between={"value": (0.0, 450.0)},
-        column_types={"event_id": "bigint", "value": "double"},
-        row_count_min=1,
-    )

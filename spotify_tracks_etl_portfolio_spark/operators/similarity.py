@@ -181,33 +181,23 @@ FLAT_PROBE_MAX_K = 64
 COARSE_NPROBE = 2
 
 
-def _book_matrix(cent_rows: list[tuple[int, list[float]]]):
-    """(cells, unit_matrix) prep shared by every flat probe
-    (``probe_cells_udf``, ``_grouped_probe_udf``, ``pq_encode``):
-    centroids sorted by cell id so stable argsort resolves ties to the
-    smallest cell, norms clamped so an all-zero vector/centroid gets
-    similarity 0 and a defined assignment instead of NaN everywhere.
-    One implementation keeps the three probes provably in sync."""
+def probe_cells_fn(cent_rows: list[tuple[int, list[float]]], nprobe: int):
+    """The numpy nearest-cell kernel: a callable ``(n, dim) float64
+    matrix -> (n, nprobe) int64 cell matrix``. One implementation
+    serves every probe — the Arrow-batched executor UDF
+    (:func:`probe_cells_udf`), the PQ code UDF (:func:`pq_encode`), the
+    joint PQ trainer's grouped probe and the driver-side probe of a
+    bounded, already-collected query batch (``ivfpq_query_index``) — so
+    all call sites are bit-identical by construction. Centroids are
+    sorted by cell id so stable argsort resolves ties to the smallest
+    cell; norms are clamped so an all-zero vector/centroid gets
+    similarity 0 and a defined assignment instead of NaN everywhere."""
     import numpy as np
 
     cents = sorted(cent_rows)
     cells = np.array([c for c, _ in cents], dtype=np.int64)
-    m = np.array([v for _, v in cents], dtype=np.float64)
-    mn = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-    return cells, mn
-
-
-def probe_cells_fn(cent_rows: list[tuple[int, list[float]]], nprobe: int):
-    """The numpy core of :func:`probe_cells_udf`: a callable
-    ``(n, dim) float64 matrix -> (n, nprobe) int64 cell matrix``. One
-    implementation serves BOTH the Arrow-batched executor UDF and the
-    driver-side probe of a bounded, already-collected query batch
-    (``ivfpq_query_index``'s literal serve path — r14 optimization
-    round): the exact same numpy ops run either place, so the two call
-    sites are bit-identical by construction."""
-    import numpy as np
-
-    cells, mn = _book_matrix(cent_rows)
+    mat = np.array([v for _, v in cents], dtype=np.float64)
+    mn = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
 
     if len(cells) <= FLAT_PROBE_MAX_K:
 
@@ -1297,55 +1287,37 @@ def auto_pq_k(n_vectors: int) -> int:
 #: recall at 0.94 on the driver testdata (random synthetic embeddings
 #: — PQ's worst case; clustered real embeddings only do better).
 PQ_SHORTLIST = 100
-#: Literal-LUT serving embeds n_queries × m × k micro-int literals in
-#: the projection and collects the query VECTORS driver-side; past this
-#: entry count pq_topk switches to the broadcast-join LUT formulation,
-#: which stays fully distributed (query vectors never leave the
-#: cluster) at the cost of m broadcast joins on the shortlist path.
-#: Both paths are answer-identical
+#: The ADC regime gate (``_adc_query_batch``): literal-LUT scoring
+#: embeds n_queries × m × k micro-int literals in the projection and
+#: collects the query VECTORS driver-side, so a query batch whose LUT
+#: would exceed this many entries is scored by the broadcast-join LUT
+#: (``_adc_join``) instead, which builds its tables on the cluster.
+#: Both scorers are answer-identical
 #: (test_pq_literal_lut_matches_join_lut /
 #: test_pq_topk_join_lut_fallback_matches_literal).
 PQ_LITERAL_LUT_MAX = 65536
-#: Hard ceiling for the HINTED literal path (a generous 8× the auto
-#: gate): adc="literal" skips the auto gate's sparse-id probe job, but
-#: a declared id range past this many LUT entries still bounces to the
-#: join path (the hint must never turn into an unbounded driver-side
-#: collect of query vectors). An absolute entry count, not a live
-#: multiple of PQ_LITERAL_LUT_MAX, so tuning the auto gate down (tests
-#: zero it to force the probe regime) cannot silently re-gate hints.
-PQ_LITERAL_HINT_MAX_ENTRIES = 8 * PQ_LITERAL_LUT_MAX
 
 
 def _grouped_probe_udf(books: list[list[tuple[int, list[float]]]]):
     """Arrow-batched nearest-cell probe for ALL subspaces at once: rows
-    carry (subspace, subvector) and each subspace's batch slice runs one
-    numpy GEMM against ITS codebook — the per-subspace math (6-dp
-    rounding, smallest-cell stable ties, clamped norms) is identical to
-    ``probe_cells_udf``'s flat path, just grouped so the whole joint
-    assignment is ONE Python evaluation instead of m. Flat ONLY —
-    callers route books wider than ``FLAT_PROBE_MAX_K`` through
-    ``probe_cells_udf`` (two-level) instead."""
+    carry (subspace, subvector) and each subspace's batch slice runs
+    that subspace's :func:`probe_cells_fn` kernel (built once, outside
+    the UDF body), so the whole joint assignment is ONE Python
+    evaluation instead of m."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    cells, mats = [], []
-    for book in books:
-        bc, bm = _book_matrix(book)
-        cells.append(bc)
-        mats.append(bm)
+    runs = [probe_cells_fn(book, 1) for book in books]
 
     @pandas_udf("long")
     def probe(ms, vs):
         x = np.stack(vs.to_numpy()).astype(np.float64)
-        xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
         marr = ms.to_numpy()
-        out = np.empty(len(xn), dtype=np.int64)
+        out = np.empty(len(x), dtype=np.int64)
         for mi in np.unique(marr):
             rows = np.where(marr == mi)[0]
-            sims = np.round(xn[rows] @ mats[mi].T, 6)
-            best = np.argsort(-sims, axis=1, kind="stable")[:, 0]
-            out[rows] = cells[mi][best]
+            out[rows] = runs[mi](x[rows])[:, 0]
         return pd.Series(out)
 
     return probe
@@ -1397,8 +1369,8 @@ def pq_train_codebooks(
 
     Past ``FLAT_PROBE_MAX_K`` centroids the per-subspace chains route
     through ``kmeans_centroids`` unchanged, so the assignment keeps the
-    two-level probe semantics the rest of the module uses at wide k —
-    the joint one-pass path is flat-probe only."""
+    two-level probe semantics the rest of the module uses at wide k in
+    the per-subspace chain the oracle replays."""
     if k > FLAT_PROBE_MAX_K:
         books_wide: list[list[tuple[int, list[float]]]] = []
         for mi in range(m):
@@ -1512,60 +1484,30 @@ def pq_encode(
     books: list[list[tuple[int, list[float]]]],
     sub_dim: int | None = None,
 ) -> DataFrame:
-    """Corpus → PQ codes: per subspace, the Arrow-batched nearest-
-    centroid probe (one numpy GEMM per batch). Output is one BIGINT
-    code per subspace — the 100 TB win: ~64 floats compress to m
-    bytes-scale codes, and serving scans codes, never vectors.
+    """Corpus → PQ codes: one Arrow evaluation emitting ALL m codes per
+    vector, each subspace probed by its :func:`probe_cells_fn` kernel
+    (flat GEMM, or two-level past ``FLAT_PROBE_MAX_K`` centroids —
+    the assignment semantics the books were trained with). Output is
+    one BIGINT code per subspace — the 100 TB win: ~64 floats compress
+    to m bytes-scale codes, and serving scans codes, never vectors.
     ``sub_dim`` defaults to the width the books were trained at (their
     centroid length) — passing a mismatched override would slice the
-    wrong vector segments. Books wider than ``FLAT_PROBE_MAX_K`` route
-    per subspace through ``probe_cells_udf``'s two-level path, matching
-    the assignment semantics the books were trained with — at the cost
-    of m Arrow evaluations per batch (vs the flat path's one joint
-    evaluation); no registered query uses wide PQ books, so the joint
-    two-level probe is deliberately unbuilt until a consumer exists."""
-    if sub_dim is None:
-        sub_dim = len(books[0][0][1])
-    m = len(books)
-
-    if max(len(book) for book in books) > FLAT_PROBE_MAX_K:
-        out = scan_parallelism(emb).select(F.col(id_col), F.col(vec_col))
-        for mi, book in enumerate(books):
-            probe = probe_cells_udf(book, nprobe=1)
-            out = out.withColumn(
-                f"code_{mi}",
-                F.element_at(
-                    probe(F.slice(vec_col, mi * sub_dim + 1, sub_dim)), 1
-                ),
-            )
-        return out.drop(vec_col)
-
+    wrong vector segments."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    cellss, mats = [], []
-    for book in books:
-        bc, bm = _book_matrix(book)
-        cellss.append(bc)
-        mats.append(bm)
+    if sub_dim is None:
+        sub_dim = len(books[0][0][1])
+    m = len(books)
+    runs = [probe_cells_fn(book, 1) for book in books]
 
-    # one Arrow evaluation emitting ALL m codes per vector (the old
-    # per-subspace probe chain was m separate UDF columns); per-subspace
-    # math — slice, clamped-norm cosine, 6-dp round, smallest-cell
-    # stable ties — is identical to probe_cells_udf's flat path
     @pandas_udf("array<long>")
     def codes(vs):
         x = np.stack(vs.to_numpy()).astype(np.float64)
         out = np.empty((len(x), m), dtype=np.int64)
-        for mi in range(m):
-            sub = x[:, mi * sub_dim : (mi + 1) * sub_dim]
-            sn = sub / np.maximum(
-                np.linalg.norm(sub, axis=1, keepdims=True), 1e-12
-            )
-            sims = np.round(sn @ mats[mi].T, 6)
-            best = np.argsort(-sims, axis=1, kind="stable")[:, 0]
-            out[:, mi] = cellss[mi][best]
+        for mi, run in enumerate(runs):
+            out[:, mi] = run(x[:, mi * sub_dim : (mi + 1) * sub_dim])[:, 0]
         return pd.Series(list(out))
 
     # scan_parallelism: the code UDF runs on emb's partitioning
@@ -1581,62 +1523,24 @@ def pq_encode(
     )
 
 
-class _AdcLutOverflow(Exception):
-    """Literal-LUT micro-int sum could wrap BIGINT — caller must use
-    the DECIMAL-sum join path (round-7 advice item: m entries of up to
-    ~1e18 magnitude each can exceed 2^63 for large-magnitude
-    unnormalized dot products; unreachable for bounded embeddings, but
-    unguarded wrap would be silent wrong answers)."""
-
-
-def _pq_adc_literal(
-    codes: DataFrame,
-    qs: DataFrame,
-    books: list[list[tuple[int, list[float]]]],
-    m: int,
-    sub_dim: int,
-) -> DataFrame:
-    """(neighbor_id, query_id, __adc) via the literal-array LUT: the
-    per-(query, subspace, cell) partial similarities are folded into
-    the projection as exact ×10⁶ micro-int literals — zero joins, one
-    whole-stage-codegen pass over the codes. Entries are driver-side
-    exact integer math with a provability guard (see
-    ``_adc_micro_luts`` — values the guard cannot prove fall back to
-    the original one-tiny-Spark-job path, bit-identical either way).
-    Collects the query VECTORS driver-side, so it is gated behind
-    ``PQ_LITERAL_LUT_MAX`` by the caller."""
-    import functools
-    import operator
-
-    q_rows = sorted(
-        (r["query_id"], [float(x) for x in r["__qv"]]) for r in qs.collect()
-    )
-    spark = codes.sparkSession
-    qid_lit, lut_lits = _adc_micro_luts(spark, books, q_rows, m, sub_dim)
-
-    fanout = codes.select(
-        "neighbor_id",
-        *[f"code_{mi}" for mi in range(m)],
-        F.explode(
-            F.array(*[F.lit(i) for i in range(len(q_rows))])
-        ).alias("__qi"),
-    )
-    adc_micro = functools.reduce(
-        operator.add,
-        [
-            F.element_at(
-                F.element_at(lut_lits[mi], F.col("__qi") + 1),
-                F.col(f"code_{mi}").cast("int") + 1,
-            )
-            for mi in range(m)
-        ],
-    )
-    return fanout.select(
-        "neighbor_id",
-        F.element_at(qid_lit, F.col("__qi") + 1).alias("query_id"),
-        # exact integer sum → one correctly-rounded division: equals
-        # the DECIMAL(18,6)-sum path's BigDecimal.doubleValue
-        (adc_micro.cast("double") / F.lit(1000000.0)).alias("__adc"),
+def _adc_query_batch(
+    qs: DataFrame, books: list[list[tuple[int, list[float]]]]
+) -> list[tuple[int, list[float]]] | None:
+    """The one ADC regime gate, shared by :func:`pq_topk` and
+    :func:`ivfpq_query_index`: collect at most ``cap + 1`` rows of the
+    (query_id, __qv) frame, ``cap = PQ_LITERAL_LUT_MAX // total_k`` —
+    one bounded job that never scans a genuinely large query set end
+    to end. A batch of 1..cap queries is the literal regime: the
+    sorted ``(query_id, vector)`` rows returned here ARE its query set.
+    An empty or wider batch returns None — the join regime
+    (:func:`_adc_join`), where query vectors never reach the driver."""
+    total_k = sum(len(book) for book in books)
+    cap = PQ_LITERAL_LUT_MAX // total_k if total_k else 0
+    batch = qs.limit(cap + 1).collect() if cap else []
+    if not 0 < len(batch) <= cap:
+        return None
+    return sorted(
+        (r["query_id"], [float(x) for x in r["__qv"]]) for r in batch
     )
 
 
@@ -1644,8 +1548,9 @@ def _micro_int_exact(x: float) -> int | None:
     """Driver-side replay of Spark's
     ``round(x, 6) :: DECIMAL(18,6) × 10⁶ :: BIGINT`` for a double ``x``
     — returns the micro-int ONLY when the result is PROVABLY the one
-    any JVM computes, else ``None`` (caller falls back to the Spark
-    job; r14 optimization round).
+    any JVM computes, else ``None`` (the literal LUT then bounces the
+    whole batch to the join scorer, :func:`_adc_join`, which lets Spark
+    compute every entry itself).
 
     Why provable: Spark's ``round(double, 6)`` is
     ``BigDecimal.valueOf(x).setScale(6, HALF_UP)`` —
@@ -1678,13 +1583,12 @@ def _micro_int_exact(x: float) -> int | None:
     return fl + 1 if 2 * rem > den else fl
 
 
-def _adc_micro_entries_driver(books, q_rows, sub_dim) -> dict | None:
-    """The r14 zero-job LUT-entry path: vec_dot's exact IEEE fold
-    replayed in Python (same binary64 ops, same order) + the provable
-    round chain (``_micro_int_exact``). Returns None as soon as any
-    entry is unprovable — the caller then runs the Spark-job twin for
-    the WHOLE batch (``test_adc_micro_luts_driver_math_matches_spark_job``
-    pins dict equality between the two)."""
+def _adc_micro_entries(books, q_rows) -> dict | None:
+    """``{(subspace, query index, cell): micro-int}`` LUT entries with
+    zero Spark jobs: vec_dot's exact IEEE fold replayed in Python (same
+    binary64 ops, same order) + the provable round chain
+    (``_micro_int_exact``). None as soon as any entry is unprovable."""
+    sub_dim = len(books[0][0][1])
     micro: dict = {}
     for mi, book in enumerate(books):
         for qi, (_, qv) in enumerate(q_rows):
@@ -1703,84 +1607,36 @@ def _adc_micro_entries_driver(books, q_rows, sub_dim) -> dict | None:
     return micro
 
 
-def _adc_micro_entries_spark(spark, books, q_rows, sub_dim) -> dict:
-    """The original one-tiny-Spark-job LUT-entry computation — each
-    entry IS Spark's own ``round(vec_dot(...), 6) :: DECIMAL(18,6)``.
-    Kept as the fallback for entries the driver-side integer replay
-    cannot prove (``_micro_int_exact`` → None)."""
-    lut_src = spark.createDataFrame(
-        [
-            (mi, qi, cell, qv[mi * sub_dim : (mi + 1) * sub_dim], cv)
-            for mi, book in enumerate(books)
-            for qi, (_, qv) in enumerate(q_rows)
-            for cell, cv in sorted(book)
-        ],
-        "mi int, qi int, cell int, qv array<double>, cv array<double>",
-    )
-    return {
-        (r["mi"], r["qi"], r["cell"]): r["micro"]
-        for r in lut_src.select(
-            "mi",
-            "qi",
-            "cell",
-            (
-                F.round(vec_dot("qv", "cv"), 6).cast("decimal(18,6)")
-                * F.lit(1000000)
-            )
-            .cast("long")
-            .alias("micro"),
-        ).collect()
-    }
-
-
 def _adc_micro_luts(
-    spark,
     books: list[list[tuple[int, list[float]]]],
     q_rows: list[tuple[int, list[float]]],
-    m: int,
-    sub_dim: int,
-) -> tuple[Column, list[Column]]:
+) -> tuple[Column, list[Column]] | None:
     """(qid_lit, lut_lits) — the literal-array halves of the exact ×10⁶
-    micro-int ADC LUT for a driver-bounded query batch: ``qid_lit`` is
-    the sorted query-id array, ``lut_lits[mi][qi][cell]`` the partial
-    similarity of query ``qid_lit[qi]`` against subspace ``mi``'s cell.
-    Shared by :func:`_pq_adc_literal` (flat PQ serve) and the composed
-    IVF×PQ serve's literal ADC (r13 optimization round — replaces its m
-    broadcast LUT joins for bounded batches).
+    micro-int ADC LUT for the gate's query batch (``_adc_query_batch``):
+    ``qid_lit`` is the sorted query-id array, ``lut_lits[mi][qi][cell]``
+    the partial similarity of query ``qid_lit[qi]`` against subspace
+    ``mi``'s cell. Consumed by :func:`_adc_literal`.
 
-    Entries are computed DRIVER-SIDE with zero Spark jobs (r14
-    optimization round): the dot product replays ``vec_dot``'s exact
-    IEEE fold (acc = 0.0; acc = acc + qv[i]·cv[i] — Python doubles and
-    JVM doubles run the identical binary64 ops in the identical order),
-    and the round→DECIMAL→×10⁶ chain replays through
-    ``_micro_int_exact``, which PROVES each value equals Spark's own
-    (any value whose JDK decimal rendering could be HALF_UP-ambiguous
-    reports unprovable). If ANY entry is unprovable the whole batch
-    falls back to the original one-tiny-Spark-job path
-    (``_adc_micro_entries_spark``) — bit-identical either way, pinned by
-    ``test_adc_micro_luts_driver_math_matches_spark_job``. Raises
-    ``_AdcLutOverflow`` when the integer ADC sum could wrap (callers
-    fall back to the DECIMAL-sum join path, answers identical)."""
+    Entries are computed DRIVER-SIDE with zero Spark jobs: the dot
+    product replays ``vec_dot``'s exact IEEE fold (acc = 0.0; acc = acc
+    + qv[i]·cv[i] — Python doubles and JVM doubles run the identical
+    binary64 ops in the identical order), and the round→DECIMAL→×10⁶
+    chain replays through ``_micro_int_exact``, which PROVES each value
+    equals Spark's own. Returns None — the one bounce to the DECIMAL
+    join scorer (:func:`_adc_join`), answers identical — when the
+    literal form cannot serve the batch: a codebook whose cell ids are
+    not 0..k-1, any entry the guard cannot prove, or LUT magnitudes
+    whose m-entry integer sum could wrap BIGINT."""
     for book in books:
         if sorted(c for c, _ in book) != list(range(len(book))):
-            raise ValueError(
-                "pq literal-LUT serving requires contiguous 0..k-1 "
-                "cell ids (every codebook this module trains has them); "
-                f"got {sorted(c for c, _ in book)}"
-            )
-    micro = _adc_micro_entries_driver(books, q_rows, sub_dim)
+            return None
+    micro = _adc_micro_entries(books, q_rows)
     if micro is None:
-        micro = _adc_micro_entries_spark(spark, books, q_rows, sub_dim)
-
-    # the ADC score sums m micro-int entries: validate the worst-case
-    # |sum| fits BIGINT (exactness guarantee of the integer-sum path);
-    # out-of-range magnitudes bounce to the DECIMAL-sum join path
-    worst = max((abs(v) for v in micro.values()), default=0) * m
-    if worst >= 2**63:
-        raise _AdcLutOverflow(
-            f"max |LUT entry| × m = {worst} ≥ 2^63 — literal ADC sum "
-            "could wrap; serving falls back to the DECIMAL-sum join LUT"
-        )
+        return None
+    # the ADC score sums m micro-int entries: the worst-case |sum| must
+    # fit BIGINT (exactness guarantee of the integer-sum path)
+    if max((abs(v) for v in micro.values()), default=0) * len(books) >= 2**63:
+        return None
 
     # lut[mi][qi][cell] — micro-int partial similarities; arrays typed
     # long (the L suffix) so the ADC sum can never wrap int32, and
@@ -1815,47 +1671,82 @@ def _adc_micro_luts(
     return qid_lit, lut_lits
 
 
-def _pq_adc_join(
-    codes: DataFrame,
-    qs: DataFrame,
-    books: list[list[tuple[int, list[float]]]],
-    m: int,
-    sub_dim: int,
+def _adc_literal(
+    cand: DataFrame, qid_lit: Column, lut_lits: list[Column]
 ) -> DataFrame:
-    """(neighbor_id, query_id, __adc) via broadcast LUT joins: each
-    subspace's (query, cell) partial-similarity table is built ON the
-    cluster (query vectors never reach the driver) and broadcast-joined
-    onto the codes. This is the scale path past ``PQ_LITERAL_LUT_MAX``
-    — the LUT is still tiny (n_queries × k rows per subspace) but too
-    wide to fold into the plan as literals. DECIMAL(18,6)-exact entries
-    and sum keep it hash-identical to the literal path
-    (``test_pq_topk_join_lut_fallback_matches_literal``)."""
+    """(query_id, neighbor_id, __adc) by the literal LUT
+    (:func:`_adc_micro_luts`) over candidates carrying query_id and
+    code_*: the per-(query, subspace, cell) partial similarities are
+    folded into the projection as exact ×10⁶ micro-int literals — zero
+    joins, one whole-stage-codegen pass over the codes."""
     import functools
     import operator
 
-    spark = codes.sparkSession
-    scored = codes
+    qi = F.array_position(qid_lit, F.col("query_id")).cast("int")
+    adc_micro = functools.reduce(
+        operator.add,
+        [
+            F.element_at(
+                F.element_at(lut, qi), F.col(f"code_{mi}").cast("int") + 1
+            )
+            for mi, lut in enumerate(lut_lits)
+        ],
+    )
+    return cand.select(
+        "query_id",
+        "neighbor_id",
+        # exact integer sum → one correctly-rounded division: equals
+        # the DECIMAL(18,6)-sum path's BigDecimal.doubleValue
+        (adc_micro.cast("double") / F.lit(1000000.0)).alias("__adc"),
+    )
+
+
+def _adc_join(
+    cand: DataFrame,
+    qs: DataFrame,
+    books: list[list[tuple[int, list[float]]]],
+) -> DataFrame:
+    """(query_id, neighbor_id, __adc) by broadcast LUT joins: each
+    subspace's (query, cell) DECIMAL(18,6) partial-similarity table is
+    built ON the cluster from ``qs`` (query_id, __qv) — query vectors
+    never reach the driver — and broadcast-joined onto the candidates'
+    (query_id, code_mi). DECIMAL entries and sum are exact at any
+    magnitude and hash-identical to :func:`_adc_literal`, so this is the
+    single bounce for every batch the literal LUT cannot serve: wider
+    than the gate, a BIGINT-overflow risk, or an entry
+    ``_micro_int_exact`` cannot prove. Flat PQ's candidates are the
+    whole code table, without a query_id: their first LUT join, on
+    code_0 alone, fans every code row out to every query."""
+    import functools
+    import operator
+
+    spark = cand.sparkSession
+    sub_dim = len(books[0][0][1])
+    has_qid = "query_id" in cand.columns
+    scored = cand
     for mi, book in enumerate(books):
+        # the codebook's cell id is named apart from IVF×PQ's "cell"
+        # partition column
         cb = spark.createDataFrame(
-            [(c, v) for c, v in book], "cell long, __cv array<double>"
+            [(c, v) for c, v in book], "pq_cell long, __cv array<double>"
         )
         lut = qs.crossJoin(F.broadcast(cb)).select(
             "query_id",
-            F.col("cell").alias(f"code_{mi}"),
+            F.col("pq_cell").alias(f"code_{mi}"),
             F.round(
                 vec_dot(F.slice("__qv", mi * sub_dim + 1, sub_dim), "__cv"), 6
             )
             .cast("decimal(18,6)")
             .alias(f"__lv{mi}"),
         )
-        on = [f"code_{mi}"] if mi == 0 else ["query_id", f"code_{mi}"]
+        on = ["query_id", f"code_{mi}"] if has_qid or mi else [f"code_{mi}"]
         scored = scored.join(F.broadcast(lut), on)
     lv_sum = functools.reduce(
-        operator.add, [F.col(f"__lv{mi}") for mi in range(m)]
+        operator.add, [F.col(f"__lv{mi}") for mi in range(len(books))]
     )
     return scored.select(
-        "neighbor_id",
         "query_id",
+        "neighbor_id",
         F.round(lv_sum, 6).cast("double").alias("__adc"),
     )
 
@@ -1873,32 +1764,35 @@ def pq_topk(
     shortlist: int = PQ_SHORTLIST,
     books: list[list[tuple[int, list[float]]]] | None = None,
     codes: DataFrame | None = None,
-    adc: str = "auto",
 ) -> DataFrame:
     """Approximate inner-product top-k by product quantization:
     ADC shortlist, then exact re-rank — the production PQ serving
     shape. Queries stay exact; corpus vectors are represented by their
     per-subspace codes; each (query, code) partial similarity comes
-    from a tiny LOOKUP TABLE folded into the projection as literal
-    arrays (m × n_queries × k micro-int entries, ~10 KB at the frozen
-    geometry — computed driver-side, zero LUT-build jobs, zero joins on
-    the shortlist path), so the shortlist scan touches CODES only (the
-    memory-side win: m small codes per vector instead of the full float
-    payload) in ONE whole-stage-codegen pass. Only the per-query
-    ``shortlist`` survivors are re-scored against their true vectors.
-    Past ``PQ_LITERAL_LUT_MAX`` entries (large query batches) the ADC
-    scoring falls back to broadcast LUT joins built on the cluster —
-    query vectors never reach the driver, answers identical
+    from a tiny LOOKUP TABLE, so the shortlist scan touches CODES only
+    (the memory-side win: m small codes per vector instead of the full
+    float payload). Only the per-query ``shortlist`` survivors are
+    re-scored against their true vectors.
+
+    ADC scoring has one formulation per regime, shared with
+    :func:`ivfpq_query_index`. The gate (``_adc_query_batch``) collects
+    at most ``PQ_LITERAL_LUT_MAX // total_k + 1`` queries (ids can be
+    sparse, so the ``n_queries`` id range never decides alone). A
+    bounded batch is scored by the literal LUT (``_adc_literal``):
+    m × n_queries × k micro-int entries computed driver-side and folded
+    into the projection — zero LUT-build jobs, zero joins, one
+    whole-stage-codegen pass. Everything else — a wider batch, LUT
+    magnitudes that could wrap the BIGINT sum, an entry the provability
+    guard cannot prove — bounces to the broadcast DECIMAL LUT joins
+    (``_adc_join``), built on the cluster; answers identical
     (``test_pq_topk_join_lut_fallback_matches_literal``).
 
     Determinism: every LUT entry IS Spark's
-    ``round(vec_dot(...), 6) :: DECIMAL(18,6)`` — computed driver-side
-    by an exact integer replay with a provability guard (unprovable
-    values fall back to the original one-tiny-Spark-job path, see
-    ``_adc_micro_luts``) and folded back as an exact ×10⁶ BIGINT
-    literal; the ADC score is the exact integer sum cast to double via
-    one correctly-rounded division, which equals the DECIMAL-sum
-    path's value (both correctly round the same rational). The exact re-rank rounds the true dot to 6 dp — the
+    ``round(vec_dot(...), 6) :: DECIMAL(18,6)`` — the literal form
+    carries it as an exact ×10⁶ BIGINT and casts the exact integer sum
+    to double via one correctly-rounded division, which equals the
+    join form's DECIMAL-sum value (both correctly round the same
+    rational). The exact re-rank rounds the true dot to 6 dp — the
     full pipeline (codebooks → codes → LUTs → shortlist → re-rank) is
     hash-checkable, and ``test_pq_literal_lut_matches_join_lut`` pins
     equality against the broadcast-LUT-join formulation. Approximate =
@@ -1916,20 +1810,7 @@ def pq_topk(
     index, the full build-once/serve-many shape (encode is
     deterministic, so the artifact changes cost, never the answer:
     ``test_pq_topk_pre_encoded_codes_match_inline``).
-
-    ``adc`` picks the ADC scoring path: ``"auto"`` (default) gates on
-    the LUT entry count — when the declared ``n_queries`` id range
-    exceeds ``PQ_LITERAL_LUT_MAX`` entries it probes the ACTUAL query
-    count once (ids can be sparse) before giving up the literal path;
-    serve-many callers that already know their regime pass
-    ``"literal"`` or ``"join"`` to skip that probe job entirely
-    (round-7 advice item). The hints are answer-identical (the two
-    formulations are equality-pinned), and every literal attempt —
-    hinted or auto — still bounces to the join path when the LUT
-    magnitudes could wrap the BIGINT ADC sum (``_AdcLutOverflow``).
     """
-    if adc not in ("auto", "literal", "join"):
-        raise ValueError(f"adc must be auto|literal|join, got {adc!r}")
     if books is None:
         if codes is not None:
             raise ValueError(
@@ -1951,46 +1832,18 @@ def pq_topk(
     qs = emb.filter(F.col(id_col) < n_queries).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
     )
-    if adc == "auto":
-        total_k = sum(len(book) for book in books)
-        lut_entries = n_queries * total_k
-        if lut_entries > PQ_LITERAL_LUT_MAX:
-            # the parameter bounds the id range, not the match count —
-            # ids can be sparse, so probe the ACTUAL query set before
-            # giving up the literal path. limit() caps the probe at
-            # one-past-the-threshold so the check never scans a
-            # genuinely large query set end-to-end just to confirm the
-            # fallback. Serve-many loops that know their regime skip
-            # this job with an explicit adc hint.
-            cap = PQ_LITERAL_LUT_MAX // total_k + 1
-            lut_entries = qs.limit(cap).count() * total_k
-        use_literal = lut_entries <= PQ_LITERAL_LUT_MAX
+    q_rows = _adc_query_batch(qs, books)
+    luts = _adc_micro_luts(books, q_rows) if q_rows else None
+    if luts:
+        # the literal regime's candidates: every code row × every query
+        fanout = codes.select(
+            "neighbor_id",
+            *[f"code_{mi}" for mi in range(m)],
+            F.explode(luts[0]).alias("query_id"),
+        )
+        scored = _adc_literal(fanout, *luts)
     else:
-        use_literal = adc == "literal"
-        if use_literal:
-            # The hint skips the sparse-id PROBE job, not the size
-            # contract (round-8 advice item): an unbounded hinted
-            # literal path would collect every query vector
-            # driver-side and fold an n_queries×m×k literal array
-            # into the plan. Gate on the DECLARED id range (zero
-            # extra jobs, same as the hint's promise) with a generous
-            # multiple of the auto gate — sparse-id callers inside
-            # the ceiling keep their skip; a declared range this far
-            # past the gate is the join regime regardless of
-            # sparsity, and the two paths are answer-identical.
-            total_k = sum(len(book) for book in books)
-            if n_queries * total_k > PQ_LITERAL_HINT_MAX_ENTRIES:
-                use_literal = False
-    if use_literal:
-        try:
-            scored = _pq_adc_literal(codes, qs, books, m, sub_dim)
-        except _AdcLutOverflow:
-            # entries too large for the exact integer sum — the
-            # DECIMAL-sum join formulation is exact at any magnitude
-            use_literal = False
-            scored = _pq_adc_join(codes, qs, books, m, sub_dim)
-    else:
-        scored = _pq_adc_join(codes, qs, books, m, sub_dim)
+        scored = _adc_join(codes, qs, books)
     cand = per_group_topk(
         scored.filter(F.col("neighbor_id") != F.col("query_id")),
         "query_id",
@@ -2007,10 +1860,10 @@ def pq_topk(
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("neighbor_id")
     )
-    # broadcast the query vectors only in the literal regime, where the
-    # set is provably tiny; on the fallback path qs is by definition
-    # large — let the planner pick the join strategy
-    qv_side = F.broadcast(qs) if use_literal else qs
+    # broadcast the query vectors only when the gate bounded the batch;
+    # a wider batch is by definition large — let the planner pick the
+    # join strategy
+    qv_side = F.broadcast(qs) if q_rows else qs
     return (
         cand.join(nv, "neighbor_id")
         .join(qv_side, "query_id")
@@ -2336,14 +2189,15 @@ def ivfpq_query_index(
        (static partition pruning via a literal IN under
        ``IVF_PRUNE_LITERAL_MAX``, else the equi-join prunes) — the
        scan touches m small codes per vector, never embeddings;
-    3. ADC-score candidates: for driver-bounded query batches (≤
-       ``PQ_LITERAL_LUT_MAX`` LUT entries — the serving norm) the
-       per-(query, subspace, cell) partial similarities fold into the
-       projection as exact ×10⁶ micro-int LITERALS (zero LUT joins —
-       the ``_pq_adc_literal`` machinery); wider batches fall back to
-       per-subspace DECIMAL(18,6) lookup tables built ON the cluster
-       and broadcast (the ``_pq_adc_join`` formulation — query vectors
-       never reach the driver). Both paths are answer-identical
+    3. ADC-score candidates with the same gate and scorers as
+       :func:`pq_topk`: a batch the gate (``_adc_query_batch``) bounds
+       to ``PQ_LITERAL_LUT_MAX`` LUT entries — the serving norm — folds
+       its per-(query, subspace, cell) partial similarities into the
+       projection as exact ×10⁶ micro-int LITERALS (``_adc_literal``,
+       zero LUT joins); a wider batch, or a LUT the literal form cannot
+       carry exactly (BIGINT-overflow risk, an unprovable entry),
+       bounces to per-subspace DECIMAL(18,6) lookup tables built ON the
+       cluster and broadcast (``_adc_join``). Both are answer-identical
        (equality pytest-pinned); keep the per-query ``shortlist``
        survivors;
     4. exact re-rank: survivors equi-join their TRUE vectors from
@@ -2366,9 +2220,6 @@ def ivfpq_query_index(
     DECIMAL-exact, stable-tie kernel the separate IVF and PQ paths
     hash-check with; 'approximate' is recall (does a true neighbor's
     cell get probed / survive the shortlist), never nondeterminism."""
-    import functools
-    import operator
-
     cents = read_parquet_memo(spark, f"{index_root}/centroids")
     cent_rows = [
         (int(r["cell"]), [float(x) for x in r[vec_col]])
@@ -2378,47 +2229,23 @@ def ivfpq_query_index(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
     )
     books = load_pq_codebooks(spark, f"{index_root}/codebooks")
-    m = len(books)
-    sub_dim = len(books[0][0][1])
-    # ADC scoring gate (r13/r14 optimization rounds): for a
-    # driver-bounded query batch (the serving norm) the per-(query,
-    # subspace, cell) partial similarities fold into the projection as
-    # exact ×10⁶ micro-int LITERALS (the _pq_adc_literal machinery) —
-    # zero LUT joins, zero broadcast builds, one whole-stage-codegen
-    # pass over the pruned candidates. Gate = the same
-    # PQ_LITERAL_LUT_MAX entry budget the flat-PQ serve uses; the
-    # bounded limit(cap+1).collect() probes the ACTUAL batch size with
-    # one tiny job (collecting ≤ cap+1 query vectors — the same driver
-    # sanction as _pq_adc_literal). Wide batches and LUT-magnitude
-    # overflows keep the broadcast DECIMAL-sum join formulation below —
-    # answers identical either way (integer micro-sum/1e6 and the
-    # DECIMAL(18,6) sum correctly round the same rational; equality
-    # pytest-pinned).
-    #
-    # For the bounded batch, the collected rows ARE the query set for
-    # the WHOLE serve (r14): the cell probe runs driver-side on them
-    # (probe_cells_fn — the same numpy core the executor UDF wraps, so
-    # cells are bit-identical), qcells/probed/the re-rank broadcast all
-    # derive from this ONE evaluation of `queries`. That removes two
-    # driver jobs per serve (the qcells distinct().collect() and the
-    # separate re-rank scan of `queries`) AND makes the literal LUT
-    # consistent with the candidate set by construction even when the
-    # caller's frame is nondeterministic (r13 advice item: a sampled
-    # `queries` evaluated twice could otherwise put a query_id in the
-    # candidates that is absent from the LUT, and element_at(..., 0)
-    # raised instead of falling back).
-    total_k = sum(len(book) for book in books)
-    cap = PQ_LITERAL_LUT_MAX // total_k if total_k else 0
-    q_probe = qs.limit(cap + 1).collect() if cap else []
-    bounded = 0 < len(q_probe) <= cap
-    if bounded:
+    # For a batch the ADC gate bounds (the serving norm), the collected
+    # rows ARE the query set for the WHOLE serve: the cell probe runs
+    # driver-side on them (probe_cells_fn — the same numpy core the
+    # executor UDF wraps, so cells are bit-identical), and qcells, the
+    # probed set, the LUT and the re-rank broadcast all derive from this
+    # ONE evaluation of `queries`. That saves the qcells
+    # distinct().collect() job and a second scan of `queries`, and keeps
+    # the literal LUT consistent with the candidate set even when the
+    # caller's frame is nondeterministic (a sampled `queries` evaluated
+    # twice could put a query_id in the candidates that is absent from
+    # the LUT).
+    q_rows = _adc_query_batch(qs, books)
+    if q_rows:
         import numpy as np
 
         from pyspark.sql.types import LongType, StructField, StructType
 
-        q_rows = sorted(
-            (r["query_id"], [float(x) for x in r["__qv"]]) for r in q_probe
-        )
         cell_rows = probe_cells_fn(cent_rows, nprobe=nprobe)(
             np.array([qv for _, qv in q_rows], dtype=np.float64)
         )
@@ -2434,9 +2261,7 @@ def ivfpq_query_index(
             ),
         )
         probed = sorted({c for _, c in qcell_pairs})
-        # every later use of the query set reads the collected batch —
-        # `queries` is evaluated exactly once per serve
-        qs = spark.createDataFrame(q_probe, qs.schema)
+        qs = spark.createDataFrame(q_rows, qs.schema)
     else:
         probe_n = probe_cells_udf(cent_rows, nprobe=nprobe)
         qcells = qs.select(
@@ -2462,67 +2287,8 @@ def ivfpq_query_index(
         .join(qcells, "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
     )
-    adc = None
-    if bounded:
-        try:
-            qid_lit, lut_lits = _adc_micro_luts(
-                spark, books, q_rows, m, sub_dim
-            )
-        except _AdcLutOverflow:
-            pass
-        else:
-            qi = F.array_position(qid_lit, F.col("query_id")).cast("int")
-            adc_micro = functools.reduce(
-                operator.add,
-                [
-                    F.element_at(
-                        F.element_at(lut_lits[mi], qi),
-                        F.col(f"code_{mi}").cast("int") + 1,
-                    )
-                    for mi in range(m)
-                ],
-            )
-            adc = cand.select(
-                "query_id",
-                "neighbor_id",
-                # exact integer sum → one correctly-rounded division:
-                # equals the DECIMAL-sum path's BigDecimal.doubleValue
-                (adc_micro.cast("double") / F.lit(1000000.0)).alias(
-                    "__adc"
-                ),
-            )
-    if adc is None:
-        # ADC via broadcast LUT joins — identical math to _pq_adc_join
-        # (DECIMAL(18,6) entries and sum), but candidates already carry
-        # query_id from the cell join, so every LUT join is on
-        # (query_id, code); the codebook frame's cell-id column is named
-        # apart from the IVF "cell" partition column
-        scored = cand
-        for mi, book in enumerate(books):
-            cb = spark.createDataFrame(
-                [(c, v) for c, v in book], "pq_cell long, __cv array<double>"
-            )
-            lut = qs.crossJoin(F.broadcast(cb)).select(
-                "query_id",
-                F.col("pq_cell").alias(f"code_{mi}"),
-                F.round(
-                    vec_dot(
-                        F.slice("__qv", mi * sub_dim + 1, sub_dim), "__cv"
-                    ),
-                    6,
-                )
-                .cast("decimal(18,6)")
-                .alias(f"__lv{mi}"),
-            )
-            scored = scored.join(F.broadcast(lut), ["query_id", f"code_{mi}"])
-        lv_sum = functools.reduce(
-            operator.add, [F.col(f"__lv{mi}") for mi in range(m)]
-        )
-        adc = scored.select(
-            "query_id",
-            "neighbor_id",
-            F.round(lv_sum, 6).cast("double").alias("__adc"),
-        )
+    luts = _adc_micro_luts(books, q_rows) if q_rows else None
+    adc = _adc_literal(cand, *luts) if luts else _adc_join(cand, qs, books)
     cand_ids = per_group_topk(
         adc, "query_id", "__adc", "neighbor_id", shortlist, "__crn"
     ).select("query_id", "neighbor_id")

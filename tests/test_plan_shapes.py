@@ -319,25 +319,13 @@ SANCTIONED_NESTED_LOOP = {
     "token_pmi_collocations": "1-row corpus-totals broadcast onto the vocabulary-scaled pair table",
     "corpus_drift_psi": "1-row snapshot-totals broadcast onto the ~10-row bin table",
     # round 10
-    "embedding_ivfpq_topk": "query set (10 rows) × codebook (m×k rows) "
-    "broadcast cross for the per-subspace ADC LUTs — the _pq_adc_join "
-    "shape; both sides bounded by the query batch and the codebook, "
-    "never the corpus",
     "events_overview_approx": "five 1-row sketch-cell aggregates "
     "(HLL estimates, histogram quantiles, count) cross-composed into "
     "the single output row",
     # round 11
-    "embedding_ivfpq_filtered_topk": "the same bounded query-set × "
-    "codebook ADC-LUT broadcast cross as embedding_ivfpq_topk "
-    "(similarity.py _pq_adc_join) — the pre-filter only shrinks the "
-    "probe side; neither input scales with the corpus",
     "temperature_sampled_language_mix": "1-row corpus-totals broadcast "
     "onto the per-language table (plans/extensions.py) — the standard "
     "scalar-denominator shape sanctioned a dozen times above",
-    "embedding_ivfpq_append_topk": "the same bounded query-set × "
-    "codebook ADC-LUT broadcast cross as embedding_ivfpq_topk — the "
-    "incremental index serves through the identical query path; "
-    "neither input scales with the corpus",
     "curate_training_corpus_v3": "1-row corpus-totals broadcast onto "
     "the per-language table — the temperature_sampled_language_mix "
     "shape inside the composed pipeline",

@@ -705,32 +705,40 @@ def test_pq_joint_training_equals_per_subspace_kmeans(spark, sf_dir):
         assert sorted(joint[mi]) == want, f"subspace {mi} diverged"
 
 
-def test_pq_encode_single_udf_matches_per_subspace_probe(spark, sf_dir):
+def test_pq_encode_single_udf_matches_per_subspace_probe(
+    spark, sf_dir, monkeypatch
+):
     """The one-evaluation code UDF must emit the identical code table
-    the old per-subspace ``probe_cells_udf`` chain produced."""
+    the per-subspace ``probe_cells_udf`` chain produces — at the flat
+    geometry and past ``FLAT_PROBE_MAX_K`` (shrunk to 4, k=8), where
+    each subspace's kernel is the two-level probe."""
     emb = read_parquet_table(spark, sf_dir, "embeddings")
-    books = sim.pq_train_codebooks(emb, "vec_id", "embedding")
-    got = sim.pq_encode(emb, "vec_id", "embedding", books)
-    ref = emb.select("vec_id", "embedding")
-    for mi, book in enumerate(books):
-        probe = sim.probe_cells_udf(book, nprobe=1)
-        ref = ref.withColumn(
-            f"code_{mi}",
-            F.element_at(
-                probe(
-                    F.slice(
-                        "embedding",
-                        mi * sim.PQ_SUB_DIM + 1,
-                        sim.PQ_SUB_DIM,
-                    )
+    for flat_max, k in ((None, sim.PQ_K), (4, 8)):
+        if flat_max is not None:
+            monkeypatch.setattr(sim, "FLAT_PROBE_MAX_K", flat_max)
+        books = sim.pq_train_codebooks(emb, "vec_id", "embedding", k=k)
+        assert (k > sim.FLAT_PROBE_MAX_K) == (flat_max is not None)
+        got = sim.pq_encode(emb, "vec_id", "embedding", books)
+        ref = emb.select("vec_id", "embedding")
+        for mi, book in enumerate(books):
+            probe = sim.probe_cells_udf(book, nprobe=1)
+            ref = ref.withColumn(
+                f"code_{mi}",
+                F.element_at(
+                    probe(
+                        F.slice(
+                            "embedding",
+                            mi * sim.PQ_SUB_DIM + 1,
+                            sim.PQ_SUB_DIM,
+                        )
+                    ),
+                    1,
                 ),
-                1,
-            ),
-        )
-    ref = ref.drop("embedding")
-    assert got.columns == ref.columns
-    assert got.exceptAll(ref).count() == 0
-    assert ref.exceptAll(got).count() == 0
+            )
+        ref = ref.drop("embedding")
+        assert got.columns == ref.columns
+        assert got.exceptAll(ref).count() == 0
+        assert ref.exceptAll(got).count() == 0
 
 
 def test_pq_literal_lut_matches_join_lut(spark, sf_dir):
@@ -1046,75 +1054,15 @@ def test_per_group_topk_composite_tie_columns_total_comparator(spark):
     )
 
 
-def test_pq_adc_hint_skips_gate_and_matches_auto(spark, sf_dir, monkeypatch):
-    """Round-7 advice item: an explicit adc path hint must (a) validate,
-    (b) skip the capped query-count probe job the auto gate pays when
-    the declared id range exceeds PQ_LITERAL_LUT_MAX, and (c) return
-    the identical rows either way."""
-    import pytest
-
-    emb = read_parquet_table(spark, sf_dir, "embeddings")
-    books = sim.pq_train_codebooks(emb, "vec_id", "embedding")
-    with pytest.raises(ValueError, match="auto|literal|join"):
-        sim.pq_topk(emb, "vec_id", "embedding", books=books, adc="bogus")
-    auto = sim.pq_topk(emb, "vec_id", "embedding", books=books)
-    lit = sim.pq_topk(emb, "vec_id", "embedding", books=books, adc="literal")
-    jn = sim.pq_topk(emb, "vec_id", "embedding", books=books, adc="join")
-    want = sorted(map(tuple, auto.collect()))
-    assert sorted(map(tuple, lit.collect())) == want
-    assert sorted(map(tuple, jn.collect())) == want
-    # hinted literal under a zeroed threshold must NOT run the probe
-    # count: with the gate skipped the plan equals the unhinted literal
-    # (the hint's hard ceiling is a deliberately independent absolute
-    # constant, so zeroing the auto gate cannot re-gate the hint)
-    monkeypatch.setattr(sim, "PQ_LITERAL_LUT_MAX", 0)
-    hinted = sim.pq_topk(emb, "vec_id", "embedding", books=books, adc="literal")
-    assert sorted(map(tuple, hinted.collect())) == want
-    assert (
-        hinted._jdf.queryExecution().optimizedPlan().toString().count("Join")
-        == lit._jdf.queryExecution().optimizedPlan().toString().count("Join")
-    )
-
-
-def test_pq_adc_literal_hint_has_hard_size_ceiling(spark, sf_dir):
-    """Round-8 advice item: adc="literal" skips the auto gate's probe
-    job but must NOT bypass the size contract — a declared id range
-    past PQ_LITERAL_HINT_MAX_ENTRIES LUT entries bounces to the join
-    path instead of collecting an unbounded query set driver-side into
-    a literal array. Plan-gated: the bounced plan has the join
-    formulation's shape, not the literal LUT's."""
-    emb = read_parquet_table(spark, sf_dir, "embeddings")
-    books = sim.pq_train_codebooks(emb, "vec_id", "embedding")
-    total_k = sum(len(book) for book in books)
-    over = sim.PQ_LITERAL_HINT_MAX_ENTRIES // total_k + 1
-    bounced = sim.pq_topk(
-        emb, "vec_id", "embedding", books=books, n_queries=over,
-        adc="literal",
-    )
-    joined = sim.pq_topk(
-        emb, "vec_id", "embedding", books=books, n_queries=over, adc="join"
-    )
-    literal_shape = sim.pq_topk(
-        emb, "vec_id", "embedding", books=books, adc="literal"
-    )
-    n_joins = lambda df: (  # noqa: E731
-        df._jdf.queryExecution().optimizedPlan().toString().count("Join")
-    )
-    assert n_joins(bounced) == n_joins(joined)
-    assert n_joins(bounced) != n_joins(literal_shape)
-
-
-def test_pq_adc_literal_overflow_falls_back_to_join_lut(spark):
+def test_pq_adc_literal_overflow_falls_back_to_join_lut(spark, monkeypatch):
     """Round-7 advice item: LUT magnitudes whose m-entry sum could wrap
-    BIGINT must bounce the literal path to the DECIMAL-sum join LUT
-    (exact at any magnitude) instead of silently wrapping. The window
-    is real but narrow: each micro-int entry is DECIMAL(18,6)×1e6 (so
-    |entry| ≤ ~1e18, magnitudes past that fail the decimal cast loudly
-    in BOTH formulations), and m=16 entries of ~7.7e17 sum past
-    2^63 ≈ 9.22e18. Elements of ~4.4e5 give per-subspace |dot| ≈
-    4·(4.4e5)² ≈ 7.7e11 — inside DECIMAL(18,6), past 2^63/(1e6·m)."""
-    import pytest
-
+    BIGINT must bounce the literal LUT to the DECIMAL-sum join scorer
+    (exact at any magnitude) instead of silently wrapping. Elements of
+    ~4.4e5 give per-subspace |dot| ≈ 4·(4.4e5)² ≈ 7.7e11 — inside
+    DECIMAL(18,6) — and m=16 micro-int entries of ~7.7e17 sum past
+    2^63 ≈ 9.22e18. Entries that large already fail
+    ``_micro_int_exact``'s magnitude guard; the BIGINT-sum check behind
+    it is pinned on patched entries bracketing 2^63."""
     m_sub, sub_dim = 16, 4
     n, dim = 40, m_sub * sub_dim
     rows = [
@@ -1135,33 +1083,124 @@ def test_pq_adc_literal_overflow_falls_back_to_join_lut(spark):
     qs = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
     )
-    codes = sim.pq_encode(emb, "vec_id", "embedding", books, sub_dim)
-    with pytest.raises(sim._AdcLutOverflow):
-        sim._pq_adc_literal(
-            codes.withColumnRenamed("vec_id", "neighbor_id"),
-            qs,
-            books,
-            m_sub,
-            sub_dim,
-        )
-    # end-to-end: pq_topk silently serves through the join path, and
-    # the result matches the join formulation exactly
+    q_rows = sim._adc_query_batch(qs, books)
+    assert q_rows is not None  # the gate passes: the LUT itself bounces
+    assert sim._adc_micro_luts(books, q_rows) is None
+    # so does a codebook whose cell ids are not 0..k-1
+    shifted = [[(c + 1, v) for c, v in book] for book in books]
+    assert sim._adc_micro_luts(shifted, q_rows) is None
+
+    def entries(v):
+        return lambda b, q: {
+            (mi, qi, c): v
+            for mi, book in enumerate(b)
+            for qi in range(len(q))
+            for c, _ in book
+        }
+
+    with monkeypatch.context() as mp:
+        mp.setattr(sim, "_adc_micro_entries", entries(2**63 // m_sub))
+        assert sim._adc_micro_luts(books, q_rows) is None
+        mp.setattr(sim, "_adc_micro_entries", entries(2**63 // m_sub - 1))
+        assert sim._adc_micro_luts(books, q_rows) is not None
+    # end-to-end: pq_topk silently serves through the join scorer, and
+    # the result matches the gate-forced join serve exactly
     got = sim.pq_topk(
         emb, "vec_id", "embedding", books=books, n_queries=3, topk=3
     )
+    monkeypatch.setattr(sim, "PQ_LITERAL_LUT_MAX", 0)
     want = sim.pq_topk(
-        emb, "vec_id", "embedding", books=books, n_queries=3, topk=3,
-        adc="join",
+        emb, "vec_id", "embedding", books=books, n_queries=3, topk=3
     )
+    n_joins = lambda df: (  # noqa: E731
+        df._jdf.queryExecution().optimizedPlan().toString().count("Join")
+    )
+    assert n_joins(got) == n_joins(want)
+    assert got.schema == want.schema
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, want.collect())
     )
 
 
+def test_unprovable_lut_entry_bounces_to_join_scorer(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """One LUT entry ``_micro_int_exact`` cannot prove bounces the whole
+    batch to the DECIMAL join scorer — for flat PQ and for IVF×PQ alike
+    — and each serve returns the literal serve's rows and schema."""
+    emb = read_parquet_table(spark, sf_dir, "embeddings")
+    root = str(tmp_path / "ivfpq_bounce")
+    sim.build_ivfpq_index(emb, "vec_id", "embedding", root, k_cells=8, pq_k=16)
+    books = sim.load_pq_codebooks(spark, f"{root}/codebooks")
+    queries = emb.filter(F.col("vec_id") < 10)
+    serves = {
+        "pq": lambda: sim.pq_topk(emb, "vec_id", "embedding", books=books),
+        "ivfpq": lambda: sim.ivfpq_query_index(
+            spark, root, queries, emb, "vec_id", "embedding", 5, nprobe=2
+        ),
+    }
+    literal = {name: serve() for name, serve in serves.items()}
+    # the first LUT entry both serves compute: query 0, subspace 0, cell 0
+    q_rows = sim._adc_query_batch(
+        queries.select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("__qv"),
+        ),
+        books,
+    )
+    sub = q_rows[0][1][: len(books[0][0][1])]
+    acc = 0.0
+    for a, b in zip(sub, sorted(books[0])[0][1]):
+        acc = acc + a * b
+    exact = sim._micro_int_exact
+    monkeypatch.setattr(
+        sim, "_micro_int_exact", lambda x: None if x == acc else exact(x)
+    )
+    assert sim._adc_micro_luts(books, q_rows) is None
+    n_joins = lambda df: (  # noqa: E731
+        df._jdf.queryExecution().optimizedPlan().toString().count("Join")
+    )
+    for name, serve in serves.items():
+        bounced = serve()
+        # the plan carries the m per-subspace LUT joins
+        assert n_joins(bounced) >= n_joins(literal[name]) + len(books), name
+        assert bounced.schema == literal[name].schema, name
+        assert sorted(map(tuple, bounced.collect())) == sorted(
+            map(tuple, literal[name].collect())
+        ), name
+
+
+def test_pq_serve_warm_job_count_pinned(spark, sf_dir):
+    """The warm serve (artifacts already built) of the two PQ queries
+    runs no more Spark jobs than before the ADC collapse: 11 for
+    ``embedding_pq_topk`` and 12 for ``embedding_ivfpq_topk`` in this
+    session (local[4], 4 shuffle partitions; the same at sf0.001 and
+    sf0.01). A re-added gate probe job fails here."""
+    from spotify_tracks_etl_portfolio_spark.plans import all_queries
+
+    sc = spark.sparkContext
+    pinned = {"embedding_pq_topk": 11, "embedding_ivfpq_topk": 12}
+    got = {}
+    for name in pinned:
+        for lap in ("cold", "warm"):
+            group = f"pq_job_pin:{name}:{lap}"
+            sc.setJobGroup(group, group)
+            try:
+                rows = all_queries()[name].fn(spark, sf_dir).collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            assert rows
+        # job-start events reach the status store asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert all(got[name] <= pinned[name] for name in pinned), got
+
+
 def test_micro_int_exact_matches_spark_round_chain(spark):
     """r14: the driver-side micro-int replay must agree with Spark's
     own ``round(x,6)::DECIMAL(18,6)×1e6::BIGINT`` wherever it claims
-    provability, and must REFUSE (None → Spark-job fallback) on values
+    provability, and must REFUSE (None → join-scorer bounce) on values
     whose decimal rendering straddles a 6-dp HALF_UP tie (the JDK
     Double.toString ambiguity window the guard exists for)."""
     provable = [
@@ -1205,8 +1244,11 @@ def test_micro_int_exact_matches_spark_round_chain(spark):
 def test_adc_micro_luts_driver_math_matches_spark_job(spark, sf_dir):
     """r14: on the real gate geometry (sf embeddings, trained books,
     the registered 10-query batch) the zero-job driver LUT entries must
-    equal the Spark-job entries EXACTLY — and the driver path must
-    actually engage (no silent permanent fallback)."""
+    equal Spark's own ``round(vec_dot, 6)::DECIMAL(18,6)×1e6::BIGINT``
+    EXACTLY — and the driver path must actually engage (no silent
+    permanent bounce to the join scorer)."""
+    from spotify_tracks_etl_portfolio_spark.functions import vec_dot
+
     emb = read_parquet_table(spark, sf_dir, "embeddings")
     books = sim.pq_train_codebooks(emb, "vec_id", "embedding")
     qs = emb.filter(F.col("vec_id") < 10).select(
@@ -1216,9 +1258,32 @@ def test_adc_micro_luts_driver_math_matches_spark_job(spark, sf_dir):
         (r["query_id"], [float(x) for x in r["__qv"]]) for r in qs.collect()
     )
     sub_dim = len(books[0][0][1])
-    drv = sim._adc_micro_entries_driver(books, q_rows, sub_dim)
+    drv = sim._adc_micro_entries(books, q_rows)
     assert drv is not None, "gate data must take the zero-job path"
-    spk = sim._adc_micro_entries_spark(spark, books, q_rows, sub_dim)
+    spk = {
+        (r["mi"], r["qi"], r["cell"]): r["micro"]
+        for r in spark.createDataFrame(
+            [
+                (mi, qi, cell, qv[mi * sub_dim : (mi + 1) * sub_dim], cv)
+                for mi, book in enumerate(books)
+                for qi, (_, qv) in enumerate(q_rows)
+                for cell, cv in book
+            ],
+            "mi int, qi int, cell int, qv array<double>, cv array<double>",
+        )
+        .select(
+            "mi",
+            "qi",
+            "cell",
+            (
+                F.round(vec_dot("qv", "cv"), 6).cast("decimal(18,6)")
+                * F.lit(1000000)
+            )
+            .cast("long")
+            .alias("micro"),
+        )
+        .collect()
+    }
     assert drv == spk
 
 
