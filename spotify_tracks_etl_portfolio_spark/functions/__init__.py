@@ -39,6 +39,17 @@ def quote_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def str_lit_sql(s: str) -> str:
+    """Exact SQL string literal text under either value of
+    ``spark.sql.parser.escapedStringLiterals``: plain ``'…'`` when the
+    value holds neither of the two characters that conf reads
+    differently (``'`` and ``\\``), else its UTF-8 bytes as a binary
+    literal cast back to STRING, which no parser setting reinterprets."""
+    if "'" in s or "\\" in s:
+        return f"CAST(X'{s.encode('utf-8').hex().upper()}' AS STRING)"
+    return f"'{s}'"
+
+
 def num_lit_sql(v) -> str | None:
     """Exact SQL literal text for an int or finite float, else None.
     String-cast form sidesteps parser edge cases (negative literals
@@ -122,10 +133,6 @@ def vec_norm_safe(a: Column | str, eps: float = VEC_NORM_EPS) -> Column:
     """``vec_norm`` clamped away from zero — use in any cosine
     denominator so all-zero embeddings yield 0.0, not NaN."""
     return F.greatest(vec_norm(a), F.lit(eps))
-
-
-def cosine_similarity(a: Column | str, b: Column | str) -> Column:
-    return vec_dot(a, b) / (vec_norm_safe(a) * vec_norm_safe(b))
 
 
 # ---------------------------------------------------------------------------

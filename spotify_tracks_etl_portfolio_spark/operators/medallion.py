@@ -158,7 +158,6 @@ def silver_transform(
     median_cols: list[str],
     mode_cols: list[str],
     clamps: dict[str, tuple[float, float]],
-    exact_stats: bool = True,
 ) -> DataFrame:
     """The full bronze→silver pipeline in the reference's two-phase order
     (SURVEY.md §3.2): stats over RAW bronze (duplicates included!) →
@@ -171,7 +170,7 @@ def silver_transform(
     """
     from spotify_tracks_etl_portfolio_spark.operators.stats import compute_impute_stats
 
-    stats = compute_impute_stats(bronze, median_cols, mode_cols, exact=exact_stats)
+    stats = compute_impute_stats(bronze, median_cols, mode_cols)
     imputed = impute_and_clamp(bronze, stats["medians"], stats["modes"], clamps)
     return dedup_first(imputed, dedup_key, dedup_order)
 

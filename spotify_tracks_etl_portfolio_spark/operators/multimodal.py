@@ -1,15 +1,13 @@
 """Multimodal column support: image/audio/video as opaque ``binary``
-columns with typed metadata, processed by Arrow-batched ``mapInPandas``
-operators (north star: multimodal training-data pipelines).
+columns, processed by Arrow-batched ``mapInPandas`` operators (north
+star: multimodal training-data pipelines).
 
-The Spark-side plumbing is real and tested — schema, partitioning, UDF
-signatures, batch shapes. Image decode is REAL for three formats via
-pure-Python/stdlib codecs: PNG (zlib inflate + full scanline
-de-filtering, CRC-checked), uncompressed 24-bit BMP (bottom-up and
-top-down), and binary PPM (P6). Formats that would need a native codec
-(JPEG/ffmpeg/soundfile — not in this container) raise a documented
-``NotImplementedError`` at the same seam, and an external ``codec``
-callable can be injected there.
+Every codec is REAL and pure-Python/stdlib (plus numpy): PNG (zlib
+inflate + full scanline de-filtering, CRC-checked), uncompressed 24-bit
+BMP (bottom-up and top-down), binary PPM (P6), baseline JPEG, animated
+GIF (LZW), PCM WAV audio and YUV4MPEG2 video. Formats that would need a
+native codec (progressive JPEG, compressed video or audio) raise a
+documented ``NotImplementedError`` at the ``decode_image`` seam.
 
 Scale notes: media bytes dominate row size — keep them in their own
 column, never in join keys; ``mapInPandas`` streams Arrow batches so one
@@ -22,44 +20,11 @@ from __future__ import annotations
 import struct
 import zlib
 from collections.abc import Iterator
-from typing import Literal
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-#: Typed metadata carried alongside every media blob.
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType(), False),  # image|audio|video
-        T.StructField("format", T.StringType(), True),  # png|wav|mp4|...
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-    ]
-)
-
-
-def attach_fake_media(
-    df: DataFrame, text_col: str, media_type: str = "image"
-) -> DataFrame:
-    """Deterministic stand-in media: the utf-8 bytes of a text column as
-    the blob + a metadata struct. Lets the whole pipeline run end-to-end
-    in this container with real binary-typed data."""
-    return df.withColumn("media", F.encode(F.col(text_col), "UTF-8")).withColumn(
-        "media_meta",
-        F.struct(
-            F.lit(media_type).alias("media_type"),
-            F.lit("raw").alias("format"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("long").alias("duration_ms"),
-            F.lit(None).cast("int").alias("sample_rate"),
-        ),
-    )
-
+from spotify_tracks_etl_portfolio_spark.functions import scan_parallelism
 
 # ===========================================================================
 # Pure-Python image codecs (stdlib only): PNG, 24-bit BMP, PPM (P6).
@@ -815,7 +780,7 @@ def _jpeg_decode_scan(
 def decode_image(blob: bytes) -> dict:
     """Sniff + decode with the built-in pure-Python codecs. Raises the
     documented ``NotImplementedError`` for formats that need a native
-    codec — the injection seam for external codecs."""
+    codec — the seam where one would plug in."""
     if blob[:8] == _PNG_SIG:
         return decode_png(blob)
     if blob[:2] == b"BM":
@@ -835,76 +800,8 @@ def decode_image(blob: bytes) -> dict:
     raise NotImplementedError(
         "media codecs (PIL/ffmpeg) are not available in this container for "
         "this format; built-in pure-Python codecs cover png/bmp/ppm/"
-        "baseline-jpeg/gif — integrate the real decode here (or inject "
-        "`codec=`)"
+        "baseline-jpeg/gif — integrate the real decode here"
     )
-
-
-FEATURE_SCHEMA = "id long, n_bytes long, mean_byte double, first_byte int"
-
-
-def decode_media_features(
-    df: DataFrame,
-    id_col: str,
-    media_col: str = "media",
-    real: bool = False,
-    codec=None,
-    batch_size_hint: int | None = None,
-) -> DataFrame:
-    """Decode → feature-extract over Arrow batches via ``mapInPandas``.
-
-    ``real=True`` marks where the codec integration goes (PIL decode,
-    resize, frame sampling). The codec itself is INJECTED via ``codec``
-    — a callable taking the batch's blob ``pd.Series`` and returning a
-    ``pd.DataFrame`` with columns ``n_bytes, mean_byte, first_byte`` —
-    so the integration seam is testable without shipping PIL/ffmpeg;
-    with ``real=True`` and no codec the task raises
-    ``NotImplementedError`` (codecs are not in this container). The
-    default fake path computes deterministic byte statistics with
-    identical batch shape and output schema, so everything downstream
-    of decode is genuinely exercised.
-    """
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if real:
-                active = codec if codec is not None else _builtin_byte_codec
-                feats = active(pdf[media_col])
-                feats = feats.assign(id=pdf[id_col].astype("int64").values)
-                yield feats[["id", "n_bytes", "mean_byte", "first_byte"]].astype(
-                    {"id": "int64", "n_bytes": "int64",
-                     "mean_byte": "float64", "first_byte": "int32"}
-                )
-                continue
-            blobs = pdf[media_col]
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].astype("int64"),
-                    "n_bytes": blobs.map(len).astype("int64"),
-                    "mean_byte": blobs.map(
-                        lambda b: float(sum(b)) / len(b) if len(b) else 0.0
-                    ),
-                    "first_byte": blobs.map(
-                        lambda b: int(b[0]) if len(b) else -1
-                    ).astype("int32"),
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(extract, FEATURE_SCHEMA)
-
-
-def _builtin_byte_codec(blobs: pd.Series) -> pd.DataFrame:
-    """Default ``real=True`` codec: built-in image decode (png/bmp/ppm),
-    byte statistics over the DECODED samples. Unrecognized formats raise
-    the documented ``NotImplementedError`` from ``decode_image``."""
-    rows = []
-    for blob in blobs:
-        img = decode_image(bytes(blob))
-        s = img["samples"]
-        rows.append(
-            (len(s), float(sum(s)) / len(s) if s else 0.0, s[0] if s else -1)
-        )
-    return pd.DataFrame(rows, columns=["n_bytes", "mean_byte", "first_byte"])
 
 
 #: Output of the real image-decode path: true decoded dimensions +
@@ -1014,9 +911,10 @@ def jpeg_roundtrip_features(
     boolean verdicts, so the whole result stays hash-checkable despite
     DCT rounding. One Arrow-batched ``mapInPandas`` projection over a
     single scan: no driver collect, and the only possible exchange is
-    the small-input codec fan-out (``_fan_out_for_codec``) — at 100 TB
-    the codec work is embarrassingly parallel per input split and the
-    fan-out is a no-op."""
+    the under-split scan rescue (``functions.scan_parallelism``: a small
+    corpus is one parquet split, and the codec work is CPU-bound Python
+    per row) — at 100 TB the codec work is embarrassingly parallel per
+    input split and the rescue is a no-op."""
     import numpy as np
 
     def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1071,7 +969,7 @@ def jpeg_roundtrip_features(
                  "restart_interval": "int32"}
             )
 
-    return _fan_out_for_codec(df.select(id_col, text_col)).mapInPandas(
+    return scan_parallelism(df.select(id_col, text_col)).mapInPandas(
         roundtrip, JPEG_ROUNDTRIP_SCHEMA
     )
 
@@ -1251,60 +1149,6 @@ def audio_fingerprints(
 
     return df.select(id_col, media_col).mapInPandas(
         fp, "id long, n_samples long, fingerprint long"
-    )
-
-
-def resize_stub(
-    df: DataFrame,
-    id_col: str,
-    media_col: str = "media",
-    target_bytes: int = 64,
-) -> DataFrame:
-    """'Resize' plumbing: truncate blobs to a fixed byte budget (stand-in
-    for image resize / audio downsample) — shows the binary→binary
-    mapInPandas shape."""
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].astype("int64"),
-                    "media_small": pdf[media_col].map(lambda b: b[:target_bytes]),
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(
-        resize, "id long, media_small binary"
-    )
-
-
-def frame_sample_stub(
-    df: DataFrame,
-    id_col: str,
-    media_col: str = "media",
-    stride: int = 16,
-    media_type: Literal["video", "audio"] = "video",
-) -> DataFrame:
-    """'Frame sampling' plumbing: one output row per strided offset
-    (stand-in for video frame extraction) — shows the 1→N explode shape
-    with binary payloads."""
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, frame_idx, frames = [], [], []
-            for _id, blob in zip(pdf[id_col], pdf[media_col]):
-                for fi, off in enumerate(range(0, len(blob), stride)):
-                    ids.append(int(_id))
-                    frame_idx.append(fi)
-                    frames.append(blob[off : off + stride])
-            yield pd.DataFrame(
-                {"id": pd.Series(ids, dtype="int64"),
-                 "frame_idx": pd.Series(frame_idx, dtype="int32"),
-                 "frame": frames}
-            )
-
-    return df.select(id_col, media_col).mapInPandas(
-        sample, "id long, frame_idx int, frame binary"
     )
 
 
@@ -1673,23 +1517,6 @@ _GIF_FP_MULT = 31
 _GIF_FP_MOD = 1_000_000_007
 
 
-def _fan_out_for_codec(df: DataFrame) -> DataFrame:
-    """Codec-bound stages are CPU-heavy Python per row, so their
-    parallelism must come from PARTITION COUNT, not data size: a small
-    corpus arrives as one parquet split and would serialize the whole
-    codec pass onto one core (measured: the JPEG roundtrip at sf0.1 ran
-    27 s on local[32] — zero parallelism — vs ~2 s fanned out). When
-    the input has fewer partitions than cores, round-robin repartition
-    to defaultParallelism — a tiny shuffle of (id, text) rows that buys
-    full-width codec execution. At 100 TB inputs arrive as thousands of
-    splits and this is a no-op."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
 def gif_frame_features(
     df: DataFrame, id_col: str, text_col: str, width: int = 16
 ) -> DataFrame:
@@ -1737,7 +1564,7 @@ def gif_frame_features(
                  "width": "int32", "height": "int32", "frame_fp": "int64"}
             )
 
-    return _fan_out_for_codec(df.select(id_col, text_col)).mapInPandas(
+    return scan_parallelism(df.select(id_col, text_col)).mapInPandas(
         sample,
         "id long, frame_idx int, n_frames int, width int, height int, "
         "mean_px double, frame_fp long",

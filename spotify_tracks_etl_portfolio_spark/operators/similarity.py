@@ -789,17 +789,6 @@ def hyperplane_lsh_near_dup_pairs(
     )
 
 
-def normalize_vectors(df: DataFrame, vec_col: str) -> DataFrame:
-    """L2-normalize an embedding column (zip_with over the array);
-    all-zero vectors stay all-zero (clamped denominator) instead of
-    going NaN."""
-    norm = vec_norm_safe(vec_col)
-    return df.withColumn(
-        vec_col,
-        F.transform(F.col(vec_col), lambda x: x.cast("double") / norm),
-    )
-
-
 def diversity_sample_cells(
     df: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:

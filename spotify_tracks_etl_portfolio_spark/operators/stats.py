@@ -205,7 +205,9 @@ def _bucketed_global_ranks(
     lits = [num_lit_sql(b) for b in bounds]
     if bounds and all(lits):
         bucket_body = F.expr(
-            " + ".join(f"CAST((`{bcol}` > {lb}) AS INT)" for lb in lits)
+            " + ".join(
+                f"CAST(({quote_ident(bcol)} > {lb}) AS INT)" for lb in lits
+            )
         )
     else:
         bucket_body = F.lit(0)

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spotify_tracks_etl_portfolio_spark.functions import str_lit_sql
 from spotify_tracks_etl_portfolio_spark.sources.readers import read_parquet_memo
 
 # Fixed marker-word lists for the n-gram/stopword language heuristic.
@@ -775,16 +776,15 @@ def _lp_map_expr(lp: dict):
     fixed-point-formatted exact Decimal literals parse as DECIMAL and
     cast to the same DECIMAL(28,9) the lit/cast chain produced
     (``test_lp_map_expr_matches_create_map`` pins column equality);
-    keys are escaped string literals. Empty vocab keeps the old
+    keys are ``str_lit_sql`` literals. Empty vocab keeps the old
     ``create_map()`` corner verbatim."""
     if not lp:
         return F.create_map()
     parts = []
     for piece, v in lp.items():
-        esc = piece.replace("\\", "\\\\").replace("'", "\\'")
         # {:f} prints Decimal fixed-point (never scientific), so the
         # literal parses as an exact DECIMAL, not a double
-        parts.append(f"'{esc}'")
+        parts.append(str_lit_sql(piece))
         parts.append(f"CAST({v:f} AS DECIMAL(28,9))")
     return F.expr("map(" + ",".join(parts) + ")")
 
@@ -1091,7 +1091,7 @@ def add_lang_id(
     # test_add_lang_id_quality_exprs_match_column_form + the oracle.
     d = df.withColumn("__li_toks", tokens(col))
     for lang, markers in LANG_MARKERS.items():
-        in_list = ", ".join(f"'{m}'" for m in markers)
+        in_list = ", ".join(str_lit_sql(m) for m in markers)
         d = d.withColumn(
             f"__li_{lang}",
             F.expr(f"size(filter(__li_toks, t -> t IN ({in_list})))"),
@@ -1101,7 +1101,8 @@ def add_lang_id(
     case = (
         "CASE "
         + " ".join(
-            f"WHEN __li_{la} = {best_sql} AND {best_sql} > 0 THEN '{la}'"
+            f"WHEN __li_{la} = {best_sql} AND {best_sql} > 0 "
+            f"THEN {str_lit_sql(la)}"
             for la in langs
         )
         + " ELSE 'und' END"
@@ -1123,7 +1124,7 @@ def add_quality(
     # parsed expr, not a filter-HOF lambda (~20 ms of py4j per call —
     # same size/filter/IN ops, r14; pinned by the lang-id/quality
     # equality test)
-    stop_list = ", ".join(f"'{s}'" for s in QUALITY_STOPWORDS)
+    stop_list = ", ".join(str_lit_sql(s) for s in QUALITY_STOPWORDS)
     d = d.withColumn(
         "__q_nstop",
         F.expr(f"size(filter(__q_toks, t -> t IN ({stop_list})))"),

@@ -186,7 +186,8 @@ def _minhash_bands_sql() -> str:
 
 def _sql_cos(ae: str, be: str) -> str:
     """6-dp-rounded cosine in DuckDB, clamped denominators — mirrors
-    ``functions.cosine_similarity`` + the probe's 1e-12 norm clamp."""
+    ``vec_dot / (vec_norm_safe * vec_norm_safe)`` and its 1e-12 norm
+    clamp."""
     return (
         f"round(list_dot_product({ae}, {be}) / "
         f"(greatest(sqrt(list_dot_product({ae}, {ae})), 1e-12) * "

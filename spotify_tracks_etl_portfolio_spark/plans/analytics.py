@@ -949,8 +949,7 @@ FROM t GROUP BY decile
     "never correctness), row_number runs per bucket, exact per-bucket "
     "counts become literal rank offsets, and the ntile value is pure "
     "arithmetic on the exact global rank. Bit-identical to the SQL "
-    "ntile — the ntile-window twin is kept as a test-only cross-check "
-    "(tests/test_analytics_extra.py)",
+    "ntile",
     tags=("analytics", "window", "stats"),
 )
 def event_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -964,25 +963,6 @@ def event_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.min("value").alias("min_value"),
         F.max("value").alias("max_value"),
-    )
-
-
-def event_value_deciles_ntile_crosscheck(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Test-only twin of :func:`event_value_deciles` using the literal
-    ntile() window (single-partition global sort — NOT registered, NOT
-    scale-safe); tests assert it matches the bucketed plan exactly."""
-    events = read_parquet_table(spark, sf_dir, "events")
-    w = Window.orderBy("value", "event_id")
-    return (
-        events.select("value", F.ntile(10).over(w).cast("int").alias("decile"))
-        .groupBy("decile")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-        )
     )
 
 

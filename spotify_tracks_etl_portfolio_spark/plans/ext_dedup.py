@@ -69,9 +69,7 @@ GROUP BY text
 )
 def dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_parquet_table(spark, sf_dir, "documents")
-    return docs.groupBy("text").agg(
-        F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("n_copies")
-    ).select("doc_id", "n_copies")
+    return _dd.exact_dedup(docs, "doc_id", "text")
 
 
 

@@ -66,10 +66,6 @@ SPOTIFY_BRONZE_SCHEMA = T.StructType(
     + INGEST_METADATA_FIELDS
 )
 
-#: Silver schema is identical (CREATE TABLE ... LIKE,
-#: reference: dags/sql/de_spotify_silver.sql:5).
-SPOTIFY_SILVER_SCHEMA = SPOTIFY_BRONZE_SCHEMA
-
 #: Numeric columns median-imputed by the silver transform
 #: (reference: dags/sql/de_spotify_silver.sql:19-32; stats at
 #: dags/de_spotify_silver.py:56-63).

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from spotify_tracks_etl_portfolio_spark.functions import quote_ident
 from spotify_tracks_etl_portfolio_spark.schemas import TESTDATA_SCHEMAS, TESTDATA_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -79,16 +80,15 @@ def read_csv(
 _RAW_SCHEMA_MEMO: dict[tuple[str, int, int], T.StructType] = {}
 
 
-def read_parquet_table(
-    spark: SparkSession, sf_dir: str, table: str, schema: T.StructType | None = None
-) -> DataFrame:
+def read_parquet_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Parquet scan of one testdata table.
 
-    The explicit schema both documents intent and normalizes physical
-    types to the engine's declared types at scan time, keeping every
-    downstream operator deterministic. Timestamp columns adapt to the
-    data vintage: ns-precision INT64 (round-1 testdata) is truncated to
-    µs by exact integer division; native µs passes through untouched.
+    The declared schema (``TESTDATA_SCHEMAS``) both documents intent
+    and normalizes physical types to the engine's declared types at scan
+    time, keeping every downstream operator deterministic. Timestamp
+    columns adapt to the data vintage: ns-precision INT64 (round-1
+    testdata) is truncated to µs by exact integer division; native µs
+    passes through untouched.
     """
     path = os.path.join(sf_dir, f"{table}.parquet")
     # The driver may hand us a session built without our factory; both
@@ -113,7 +113,7 @@ def read_parquet_table(
         # supplying it back reproduces the inferred relation verbatim
         # while skipping the footer read
         df = spark.read.schema(raw).parquet(path)
-    target = schema or TESTDATA_SCHEMAS.get(table)
+    target = TESTDATA_SCHEMAS.get(table)
     if target is not None:
         actual = dict(df.dtypes)
         cols = []
@@ -122,7 +122,7 @@ def read_parquet_table(
             if isinstance(f.dataType, T.TimestampType) and actual[f.name] == "bigint":
                 # ns-precision INT64 read via nanosAsLong: exact integer
                 # division to µs (truncation — same as DuckDB's ns→µs cast).
-                src = F.timestamp_micros(F.expr(f"`{f.name}` div 1000"))
+                src = F.timestamp_micros(F.expr(f"{quote_ident(f.name)} div 1000"))
             cols.append(src.cast(f.dataType).alias(f.name))
         df = df.select(*cols)
     return df

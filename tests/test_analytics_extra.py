@@ -16,10 +16,7 @@ from spotify_tracks_etl_portfolio_spark.operators.stats import (
     exact_ntile,
     global_row_number,
 )
-from spotify_tracks_etl_portfolio_spark.plans.analytics import (
-    event_value_deciles,
-    event_value_deciles_ntile_crosscheck,
-)
+from spotify_tracks_etl_portfolio_spark.plans import all_queries
 from spotify_tracks_etl_portfolio_spark.sources.readers import (
     read_parquet_table,
 )
@@ -132,13 +129,15 @@ def test_exact_ntile_more_tiles_than_rows(spark):
     assert got == [(1, 1), (2, 2), (3, 3)]
 
 
-def test_event_value_deciles_equals_ntile_crosscheck(spark, sf_dir):
-    a = sorted(tuple(r) for r in event_value_deciles(spark, sf_dir).collect())
-    b = sorted(
-        tuple(r)
-        for r in event_value_deciles_ntile_crosscheck(spark, sf_dir).collect()
-    )
-    assert a == b
+def test_event_value_deciles_equals_ntile_crosscheck(
+    spark, sf_dir, driver_style_multisets
+):
+    """The registered bucketed plan against its oracle, DuckDB's literal
+    ``ntile(10) OVER (ORDER BY value, event_id)``, under the driver's
+    type-strict comparison."""
+    spec = all_queries()["event_value_deciles"]
+    sm, om = driver_style_multisets(spark, spec.fn, spec.oracle, sf_dir)
+    assert sm == om
 
 
 def test_build_artifact_once_single_publish_under_race(tmp_path):

@@ -22,64 +22,11 @@ from spotify_tracks_etl_portfolio_spark.streaming import (
 DOCS = [(0, "hello world"), (1, "abc"), (2, "a longer document with many bytes here")]
 
 
-@pytest.fixture(scope="module")
-def media(spark):
-    return mm.attach_fake_media(
-        spark.createDataFrame(DOCS, "doc_id long, text string"), "text"
-    )
-
-
-def test_attach_media_schema(media):
-    assert dict(media.dtypes)["media"] == "binary"
-    meta = media.select("media_meta.*").first()
-    assert meta["media_type"] == "image"
-
-
-def test_decode_features(media):
-    out = {r["id"]: r for r in mm.decode_media_features(media, "doc_id").collect()}
-    assert out[1]["n_bytes"] == 3
-    assert out[1]["first_byte"] == ord("a")
-    assert out[1]["mean_byte"] == pytest.approx((97 + 98 + 99) / 3)
-
-
-def test_real_decode_is_gated(media):
-    with pytest.raises(Exception, match="NotImplementedError|codecs"):
-        mm.decode_media_features(media, "doc_id", real=True).collect()
-
-
-def test_real_decode_gate_message_is_documented(media):
+def test_real_decode_gate_message_is_documented():
     """Contract: the gate names the missing codecs and the integration
     point, so a user hitting it knows exactly what to plug in."""
-    with pytest.raises(Exception, match="media codecs .* not available"):
-        mm.decode_media_features(media, "doc_id", real=True).collect()
-
-
-def test_injected_codec_flows_through_real_path(media):
-    """Contract test for the codec seam: a fake codec injected at the
-    real=True integration point must flow through the identical Arrow
-    batch plumbing — schema coercion, id zip, row order — proving the
-    real-codec integration needs only the codec itself."""
-    import pandas as pd
-
-    def fake_codec(blobs):
-        return pd.DataFrame(
-            {
-                "n_bytes": blobs.map(len),
-                "mean_byte": blobs.map(lambda b: 42.0),
-                "first_byte": blobs.map(lambda b: 7),
-            }
-        )
-
-    out = {
-        r["id"]: r
-        for r in mm.decode_media_features(
-            media, "doc_id", real=True, codec=fake_codec
-        ).collect()
-    }
-    assert set(out) == {0, 1, 2}
-    assert out[1]["n_bytes"] == 3  # real blob lengths flow through
-    assert all(out[i]["mean_byte"] == 42.0 for i in out)
-    assert all(out[i]["first_byte"] == 7 for i in out)
+    with pytest.raises(NotImplementedError, match="media codecs .* not available"):
+        mm.decode_image(b"abc")
 
 
 def test_read_events_stream_on_absent_source(spark, tmp_path):
@@ -428,30 +375,6 @@ def test_decode_image_features_end_to_end(spark):
         assert (r["width"], r["height"], r["n_pixels"]) == (16, h, 16 * h)
         assert r["mean_pixel"] == sum(text.encode("utf-8")) / (16 * h)
         assert r["channels"] == (1 if i % 3 == 0 else 3)
-
-
-def test_real_decode_default_codec_decodes_builtin_formats(spark):
-    """real=True with no injected codec now runs the built-in image
-    codecs — the NotImplementedError seam is unreachable for png/bmp/ppm."""
-    df = spark.createDataFrame(DOCS, "doc_id long, text string")
-    media = mm.attach_encoded_media(df, "doc_id", "text", width=16)
-    out = {
-        r["id"]: r
-        for r in mm.decode_media_features(media, "doc_id", real=True).collect()
-    }
-    # doc 1 ("abc") → bmp (1%3): 16x1 grid, 3 channels → 48 decoded samples
-    assert out[1]["n_bytes"] == 48
-    assert out[1]["mean_byte"] == pytest.approx((97 + 98 + 99) * 3 / 48)
-
-
-def test_resize_and_frame_sample(media):
-    small = {r["id"]: r["media_small"] for r in mm.resize_stub(media, "doc_id", target_bytes=4).collect()}
-    assert len(small[2]) == 4 and len(small[1]) == 3
-    frames = mm.frame_sample_stub(media, "doc_id", stride=8).collect()
-    doc2 = sorted((r["frame_idx"], bytes(r["frame"])) for r in frames if r["id"] == 2)
-    assert b"".join(f for _, f in doc2) == small[2][:0] + bytes(
-        "a longer document with many bytes here", "utf-8"
-    )
 
 
 def _stage_events_dir(sf_dir, tmp_path) -> str:

@@ -95,115 +95,6 @@ def test_queries_pin_utc_on_foreign_timezone_session(spark, sf_dir):
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-def _load_check_oracle_mod():
-    import importlib.util
-    import pathlib
-
-    path = pathlib.Path(__file__).resolve().parents[1] / "tools" / "check_oracle.py"
-    spec = importlib.util.spec_from_file_location("_check_oracle_mod", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def _duck_con(sf):
-    import os
-
-    import duckdb
-
-    from spotify_tracks_etl_portfolio_spark.schemas import TESTDATA_TABLES
-
-    con = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        path = os.path.join(sf, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE OR REPLACE VIEW {t} AS "
-                f"SELECT * FROM read_parquet('{path}')"
-            )
-    return con
-
-
-def _driver_style_multisets(spark, fn, oracle, sf, chk):
-    """(spark_multiset, oracle_multiset) under the driver's type-strict
-    normalization — DuckDB fetched through Arrow, exactly like the
-    harness."""
-    sdf = fn(spark, sf)
-    s_cols = list(sdf.columns)
-    s_rows = [tuple(r) for r in sdf.collect()]
-    tbl = _duck_con(sf).execute(oracle).fetch_arrow_table()
-    o_cols = list(tbl.column_names)
-    o_rows = [tuple(d[c] for c in o_cols) for d in tbl.to_pylist()]
-    assert sorted(s_cols) == sorted(o_cols)
-    s_idx = [s_cols.index(c) for c in sorted(s_cols)]
-    o_idx = [o_cols.index(c) for c in sorted(o_cols)]
-    return (
-        chk._multiset([[r[i] for i in s_idx] for r in s_rows]),
-        chk._multiset([[r[i] for i in o_idx] for r in o_rows]),
-    )
-
-
-def test_decimal_contingency_variants_hash_match_duckdb(spark, sf_dir):
-    """The dormant decimal-output contingency (round-6 verdict item 6,
-    plans/decimal_contingency.py): each variant must hash-match DuckDB
-    under the driver's type-strict comparison at the regular test
-    scale. DECIMAL(24,8) crosses Arrow as decimal128(24,8) on both
-    engines, so there is no decimal->double conversion for the oracle
-    channel to double-round."""
-    from spotify_tracks_etl_portfolio_spark.plans.decimal_contingency import (
-        DECIMAL_VARIANTS,
-    )
-
-    chk = _load_check_oracle_mod()
-    for name, (fn, oracle) in DECIMAL_VARIANTS.items():
-        sm, om = _driver_style_multisets(spark, fn, oracle, sf_dir, chk)
-        assert sm == om, name
-        # the retyped sum columns really are Decimal-typed on both sides
-        assert any(
-            isinstance(v, tuple) and v[0] == "dec" for row in sm for v in row
-        ), name
-
-
-@pytest.mark.skipif(
-    not __import__("os").path.isdir(
-        __import__("os").path.join(
-            __import__("os").path.dirname(__import__("os").path.dirname(
-                __import__("os").path.abspath(__file__))),
-            ".stress", "sf1",
-        )
-    ),
-    reason="sf1 stress replica not generated (tools/make_stress_sf.py)",
-)
-def test_decimal_contingency_fixes_sf1_ulp_mismatch(spark):
-    """At the sf1 stress scale the DOUBLE-typed registered form
-    demonstrably mismatches DuckDB by 1-2 ulp (the decimal->double
-    conversion artifact, ROUND5.md) — and the decimal-typed variant of
-    the same query must hash-match exactly at that same scale. This is
-    the evidence that the contingency actually fixes the exposure it
-    exists for."""
-    import os
-
-    from spotify_tracks_etl_portfolio_spark.plans.decimal_contingency import (
-        DECIMAL_VARIANTS,
-    )
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sf1 = os.path.join(repo, ".stress", "sf1")
-    chk = _load_check_oracle_mod()
-
-    # the double-typed registered form shows the classified ulp artifact
-    spec = SPECS["regional_revenue"]
-    sm, om = _driver_style_multisets(spark, spec.fn, spec.oracle, sf1, chk)
-    diffs = [(a, b) for a, b in zip(sm, om) if a != b]
-    assert diffs, "sf1 no longer reproduces the ulp artifact"
-    assert all(chk._only_ulp_floats(a, b) for a, b in diffs)
-
-    # the decimal-typed variant hash-matches at the same scale
-    fn, oracle = DECIMAL_VARIANTS["regional_revenue"]
-    sm, om = _driver_style_multisets(spark, fn, oracle, sf1, chk)
-    assert sm == om
-
-
 def test_width_parametric_oracles_generalize_beyond_registered_widths(
     spark, sf_dir
 ):

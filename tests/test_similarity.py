@@ -156,14 +156,6 @@ def test_ivfpq_filtered_query_prefilter_semantics(spark, sf_dir, tmp_path):
     assert filtered and all(r[1] % 3 == 0 for r in filtered)
 
 
-def test_normalize_vectors(corpus):
-    from spotify_tracks_etl_portfolio_spark.functions import vec_norm
-
-    out = sim.normalize_vectors(corpus, "embedding")
-    norms = [r["n"] for r in out.select(vec_norm("embedding").alias("n")).collect()]
-    assert all(abs(n - 1.0) < 1e-12 for n in norms)
-
-
 def test_kmeans_centroids_deterministic_and_improving(spark, sf_dir):
     from pyspark.sql import functions as F
 
